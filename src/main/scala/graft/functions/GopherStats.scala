@@ -54,20 +54,24 @@ case class GopherStats(left: Expression, right: Expression)
   override def prettyName: String = "gopher_stats"
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
-    GopherStats.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    GopherOps.stats(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.GopherStats.eval($a, $b);")
+      s"${ev.value} = graft.functions.GopherOps.stats($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GopherStats =
     copy(left = newLeft, right = newRight)
 }
 
-object GopherStats {
+/** The kernel lives in its own object: generated code calls it through a
+  * static forwarder, and Scala writes none for a companion method that
+  * shares a name with a case-class instance method (`eval(InternalRow)`). */
+object GopherOps {
 
-  def eval(toks: ArrayData, stops: ArrayData): InternalRow = {
+  /** See [[GopherStats]]. */
+  def stats(toks: ArrayData, stops: ArrayData): InternalRow = {
     val n = toks.numElements()
     var sumLen = 0
     var sumLenNull = false

@@ -104,7 +104,7 @@ object MmFeatures {
   /** Read the persisted feature table (all batches; the `batch` partition
     * column is maintenance metadata, dropped here). */
   def read(spark: SparkSession, featuresDir: String): DataFrame =
-    spark.read.parquet(featuresDir)
+    graft.sources.Parquet.open(spark, featuresDir)
       .select("asset_id", "w", "h", "phash_hi", "phash_lo")
 
   /** AUDIO decode kernel — one real `javax.sound` PCM decode per audio
@@ -167,7 +167,7 @@ object MmFeatures {
       }
       out
     })
-    spark.read.parquet(fdir)
+    graft.sources.Parquet.open(spark, fdir)
       .select("asset_id", "sample_rate", "channels", "bits", "n_frames",
         "sum_sq", "zero_cross", "pcm_digest")
   }

@@ -120,7 +120,7 @@ object TextFeatures {
   /** Read the persisted feature table (the `batch` partition column is
     * maintenance metadata, dropped here). */
   def read(spark: SparkSession, featuresDir: String): DataFrame =
-    spark.read.parquet(featuresDir)
+    graft.sources.Parquet.open(spark, featuresDir)
       .select("doc_id", "n", "sh", "shm", "sig", "simhash", "wins")
 
   /** The two corpora the batch dedup family declares: `near` is the

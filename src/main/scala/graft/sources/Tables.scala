@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * All loads are plain parquet scans so Catalyst keeps full pushdown/pruning
   * freedom — callers express filters and projections declaratively and the
   * scan reads only what is needed (`PushedFilters` / `ReadSchema` in
-  * `.explain("formatted")`).
+  * `.explain("formatted")`). Opens run no Spark job: the schema comes from
+  * one footer read on the driver ([[Parquet.open]]).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -17,7 +18,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = Parquet.open(spark, s"$dir/$name.parquet")
     // Normalize events.ts to a session-TZ (UTC) micros TimestampType whatever
     // the fixture encoding is. Observed encodings across fixture generations:
     //   - TIMESTAMP(NANOS) → read as a nanos long under
@@ -66,7 +67,7 @@ object Tables {
         Map("path" -> s"$dir/$n.parquet"))
       ()
     }
-    val tsExpr = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
+    val tsExpr = Parquet.open(spark, s"$dir/events.parquet").schema("ts").dataType match {
       case LongType         => "timestamp_micros(ts div 1000)"
       case TimestampNTZType => "CAST(ts AS TIMESTAMP)"
       case _                => "ts"

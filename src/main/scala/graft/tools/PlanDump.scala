@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
   * ANALYZED-then-planned formatted explain (initial physical plan; AQE
   * re-optimization happens at runtime and is visible in the SQL tab, not
   * here — the judge checks plan SHAPE: Exchange count, join strategy,
-  * PushedFilters, ReadSchema).
+  * PushedFilters, ReadSchema). Exits 1 when any query failed to dump.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,18 +25,24 @@ object PlanDump {
       else args.drop(3).toSeq
     val spark = graft.GraftSession("graft-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { q =>
+    val failed = names.filterNot { q =>
       try {
         val df = graft.SparkEntry.queries(q)(spark, dir)
         val formatted = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(outDir.resolve(s"${q}_$suffix.txt"), formatted)
         println(s"[plandump] wrote $q")
+        true
       } catch {
         case e: Throwable =>
           System.err.println(s"[plandump] $q FAILED: ${e.getMessage}")
+          false
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] ${failed.size} of ${names.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }
