@@ -11,7 +11,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      streaming state) and the native Catalyst functions
   *      (`minhash_sig`, `md5_long`, `poly_fingerprint`, `vec_cosine`,
   *      `token_windows`, …) registered for both the DataFrame and SQL
-  *      surfaces.
+  *      surfaces. `Graft.install(spark)` adds the functions to a session
+  *      built elsewhere.
   *   2. `Graft.registerTables(spark, dir)` — the data directory's tables
   *      as temp views, opening the SQL door: `spark.sql("SELECT …")`.
   *   3. `Graft.query(spark, dir, name)` — any of the ~200 named,
@@ -40,9 +41,29 @@ object Graft {
   /** All named queries, sorted. */
   def queryNames: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
 
-  /** Build a named query against the tables in `dir`. */
-  def query(spark: SparkSession, dir: String, name: String): DataFrame =
-    SparkEntry.queries.getOrElse(name,
+  /** Build a named query against the tables in `dir`. Installs the
+    * engine on `spark` first, so any session works. */
+  def query(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val build = SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(
-        s"unknown query '$name' — see Graft.queryNames"))(spark, dir)
+        s"unknown query '$name' — see Graft.queryNames"))
+    install(spark)
+    build(spark, dir)
+  }
+
+  /** Adds the native functions and the as-of join strategy to a session
+    * built without `GraftExtensions` (sessions from [[session]] already
+    * have both). Idempotent. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.GraftFunctions.functions.foreach { case (id, info, builder) =>
+      registry.registerFunction(id, info, builder)
+    }
+    // extraStrategies is a read-modify-write on shared session state.
+    synchronized {
+      val exp = spark.experimental
+      if (!exp.extraStrategies.contains(plans.AsofJoinStrategy))
+        exp.extraStrategies = exp.extraStrategies :+ plans.AsofJoinStrategy
+    }
+  }
 }

@@ -21,7 +21,7 @@ object GraftSession {
     val b = SparkSession
       .builder()
       .appName(appName)
-      // Engine-native functions (minhash_sig, hyperplane_codes, vec_cosine).
+      // Native functions (graft.functions.GraftFunctions) and plan extensions.
       .withExtensions(new graft.functions.GraftExtensions)
     // A library factory must not override a real cluster master. Precedence:
     // a spark.master system property (spark-submit --master) always wins and

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * (BandHashesSpec pins it against the built-in pipeline).
   */
 case class BandHashes(child: Expression, r: Int, b: Int)
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData, ArrayData] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
@@ -35,8 +34,7 @@ case class BandHashes(child: Expression, r: Int, b: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "band_hashes"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def kernel(arr: ArrayData): ArrayData = {
     val out = new Array[Long](b)
     var bb = 0
     while (bb < b) {
@@ -51,26 +49,6 @@ case class BandHashes(child: Expression, r: Int, b: Int)
     }
     ArrayData.toArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val xxh = classOf[XXH64].getName
-      val out = ctx.freshName("out")
-      val bb = ctx.freshName("bb")
-      val j = ctx.freshName("j")
-      val h = ctx.freshName("h")
-      s"""
-        long[] $out = new long[$b];
-        for (int $bb = 0; $bb < $b; $bb++) {
-          long $h = 42L;
-          for (int $j = 0; $j < $r; $j++) {
-            $h = $xxh.hashLong($c.getLong($bb * $r + $j), $h);
-          }
-          $out[$bb] = $h;
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-      """
-    })
 
   override protected def withNewChildInternal(newChild: Expression): BandHashes =
     copy(child = newChild)

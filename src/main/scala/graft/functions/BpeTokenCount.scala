@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -39,7 +39,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * `sequence(1, 0)` walks backwards and serializes two phantom chars.
   */
 case class BpeTokenCount(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData, java.lang.Long] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -87,7 +87,7 @@ case class BpeTokenCount(child: Expression, merges: Seq[(String, String)])
 
   // Boxed so a null ELEMENT yields a null total — exactly what the
   // built-in aggregate-over-replace program produced (null propagates).
-  def countAll(input: ArrayData): java.lang.Long = {
+  def kernel(input: ArrayData): java.lang.Long = {
     var total = 0L
     var i = 0
     while (i < input.numElements()) {
@@ -100,19 +100,14 @@ case class BpeTokenCount(child: Expression, merges: Seq[(String, String)])
 
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    countAll(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeTokenCount", this, classOf[BpeTokenCount].getName)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Long ${ev.value}Boxed = $ref.countAll($c);
+      java.lang.Long ${ev.value}Boxed = ${NativeKernel.call(ctx, this, c)};
       if (${ev.value}Boxed == null) {
         ${ev.isNull} = true;
       } else {
         ${ev.value} = ${ev.value}Boxed.longValue();
       }""")
-  }
 
   override protected def withNewChildInternal(newChild: Expression): BpeTokenCount =
     copy(child = newChild)

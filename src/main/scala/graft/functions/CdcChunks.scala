@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,7 +25,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * candidate position — the difference between O(len·8) JIT-compiled char
   * reads and O(len·8) interpreter dispatches with per-window allocations.
   */
-case class CdcChunks(child: Expression) extends UnaryExpression {
+case class CdcChunks(child: Expression)
+    extends NativeUnary[UTF8String, ArrayData] {
+  import CdcChunks._
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -44,33 +45,8 @@ case class CdcChunks(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "cdc_chunks"
 
-  override protected def nullSafeEval(input: Any): Any =
-    CdcChunks.compute(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cls = classOf[CdcChunks].getName
-      s"${ev.value} = $cls.compute($c.toString());"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): CdcChunks =
-    copy(child = newChild)
-}
-
-object CdcChunks {
-  private final val Mod = 1000000007L
-  private final val WindowLen = 8
-  private final val BoundaryMod = 64
-
-  private def windowHash(s: String, from: Int, until: Int): Long = {
-    var h = 0L
-    var j = from
-    while (j < until) { h = (h * 31 + s.charAt(j)) % Mod; j += 1 }
-    h
-  }
-
-  /** Shared by eval and generated code. */
-  def compute(s: String): ArrayData = {
+  def kernel(in: UTF8String): ArrayData = {
+    val s = in.toString
     val n = s.length
     val windows = math.max(n - WindowLen + 1, 1)
     val starts = new java.util.ArrayList[Integer]()
@@ -91,5 +67,21 @@ object CdcChunks {
       k += 1
     }
     new GenericArrayData(rows)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): CdcChunks =
+    copy(child = newChild)
+}
+
+object CdcChunks {
+  private final val Mod = 1000000007L
+  private final val WindowLen = 8
+  private final val BoundaryMod = 64
+
+  private def windowHash(s: String, from: Int, until: Int): Long = {
+    var h = 0L
+    var j = from
+    while (j < until) { h = (h * 31 + s.charAt(j)) % Mod; j += 1 }
+    h
   }
 }

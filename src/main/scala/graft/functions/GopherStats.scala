@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -35,7 +34,7 @@ import org.apache.spark.sql.types._
   * empty/unicode tokens).
   */
 case class GopherStats(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeBinary[ArrayData, ArrayData, InternalRow] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -53,25 +52,7 @@ case class GopherStats(left: Expression, right: Expression)
     StructField("n_stop", IntegerType, nullable = false)))
   override def prettyName: String = "gopher_stats"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GopherOps.stats(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.GopherOps.stats($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GopherStats =
-    copy(left = newLeft, right = newRight)
-}
-
-/** The kernel lives in its own object: generated code calls it through a
-  * static forwarder, and Scala writes none for a companion method that
-  * shares a name with a case-class instance method (`eval(InternalRow)`). */
-object GopherOps {
-
-  /** See [[GopherStats]]. */
-  def stats(toks: ArrayData, stops: ArrayData): InternalRow = {
+  def kernel(toks: ArrayData, stops: ArrayData): InternalRow = {
     val n = toks.numElements()
     var sumLen = 0
     var sumLenNull = false
@@ -116,4 +97,8 @@ object GopherOps {
     new GenericInternalRow(Array[Any](
       n, if (sumLenNull) null else sumLen, nSym, nAlpha, nStop))
   }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): GopherStats =
+    copy(left = newLeft, right = newRight)
 }

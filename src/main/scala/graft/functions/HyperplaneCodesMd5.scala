@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -10,9 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expression: `hyperplane_codes_md5(array<double>) →
   * array<int>` — sign-random-projection LSH codes (4 tables × 16 bits) with
   * RADEMACHER (±1) hyperplane entries derived from the cross-engine MD5
-  * hash ([[Md5Hash]]).
+  * hash ([[Md5Hash]]):
   *
-  * Differences from [[HyperplaneCodes]] (xxhash64, uniform [-1,1] entries):
   *   - ±1 entries make each dot product a signed SUM of vector elements in
   *     fixed order — multiplication by ±1.0 is IEEE-exact — so a DuckDB
   *     oracle can rebuild the exact same bits with an ordered
@@ -21,11 +19,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (Achlioptas 2001), so nothing is lost statistically.
   *   - entries for the common (≤128-dim) case are precomputed ONCE per JVM
   *     into a flat table at class load — the per-row hot loop is pure
-  *     multiply-accumulate, no hashing at all (faster than the xxhash
-  *     variant, which hashes per element).
+  *     multiply-accumulate, no hashing at all.
   */
-case class HyperplaneCodesMd5(child: Expression) extends UnaryExpression {
-  import HyperplaneCodesMd5.{Tables, Bits}
+case class HyperplaneCodesMd5(child: Expression)
+    extends NativeUnary[ArrayData, ArrayData] {
+  import HyperplaneCodesMd5.{Tables, Bits, weight}
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
@@ -35,8 +33,7 @@ case class HyperplaneCodesMd5(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "hyperplane_codes_md5"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  def kernel(v: ArrayData): ArrayData = {
     val n = v.numElements()
     val codes = new Array[Int](Tables)
     var t = 0
@@ -47,7 +44,7 @@ case class HyperplaneCodesMd5(child: Expression) extends UnaryExpression {
         var dot = 0.0
         var i = 0
         while (i < n) {
-          dot += v.getDouble(i) * HyperplaneCodesMd5.weight(t, j, i)
+          dot += v.getDouble(i) * weight(t, j, i)
           i += 1
         }
         code = (code << 1) | (if (dot >= 0.0) 1 else 0)
@@ -58,34 +55,6 @@ case class HyperplaneCodesMd5(child: Expression) extends UnaryExpression {
     }
     ArrayData.toArrayData(codes)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cls = classOf[HyperplaneCodesMd5].getName
-      val codes = ctx.freshName("codes")
-      val t = ctx.freshName("t")
-      val j = ctx.freshName("j")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val code = ctx.freshName("code")
-      val n = ctx.freshName("n")
-      s"""
-        int[] $codes = new int[$Tables];
-        final int $n = $c.numElements();
-        for (int $t = 0; $t < $Tables; $t++) {
-          int $code = 0;
-          for (int $j = 0; $j < $Bits; $j++) {
-            double $dot = 0.0;
-            for (int $i = 0; $i < $n; $i++) {
-              $dot += $c.getDouble($i) * $cls.weight($t, $j, $i);
-            }
-            $code = ($code << 1) | ($dot >= 0.0 ? 1 : 0);
-          }
-          $codes[$t] = $code;
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($codes);
-      """
-    })
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneCodesMd5 =
     copy(child = newChild)

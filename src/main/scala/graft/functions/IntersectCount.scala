@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
@@ -20,12 +19,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * table per row: build from `b`, probe with `a`, consume each hit so
   * duplicates in `a` count once — the same count `array_intersect`
   * produces for ANY input (duplicates and nulls included; see
-  * [[LongSetOps.intersectCount]]). IntersectCountSpec pins equality
+  * [[kernel]]). IntersectCountSpec pins equality
   * against the built-in spelling on the real feature arrays plus
   * adversarial duplicate/null/empty cases.
   */
 case class IntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeBinary[ArrayData, ArrayData, Int] {
+  import IntersectCount.mix
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -38,29 +38,12 @@ case class IntersectCount(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "intersect_count"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    LongSetOps.intersectCount(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.LongSetOps.intersectCount($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Primitive-long set kernels shared by eval and codegen (a standalone
-  * object so the generated Java calls a static forwarder). */
-object LongSetOps {
-
   /** `size(array_intersect(a, b))` bit-for-bit: the number of DISTINCT
     * elements of `a` that occur in `b`, counting a null element once when
     * both sides hold one (Spark's array_intersect keeps one null in that
     * case). Open-addressing table of `b`'s values; a probe hit is
     * CONSUMED (state 2) so duplicate values in `a` cannot double-count. */
-  def intersectCount(a: ArrayData, b: ArrayData): Int = {
+  def kernel(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()
     val nb = b.numElements()
     if (na == 0 || nb == 0) return 0
@@ -98,6 +81,12 @@ object LongSetOps {
     cnt
   }
 
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): IntersectCount =
+    copy(left = newLeft, right = newRight)
+}
+
+object IntersectCount {
   @inline private def mix(v: Long): Int = {
     val h = (v ^ (v >>> 32)) * 0x9E3779B97F4A7C15L
     ((h ^ (h >>> 32)) & 0x7FFFFFFF).toInt

@@ -3,8 +3,7 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,16 +34,43 @@ object Md5Hash {
     while (i >= 0) { h = (h << 8) | (bytes(i) & 0xffL); i -= 1 }
     h
   }
+}
 
-  /** 64-bit SimHash with MD5-based token hashes (same tally/tie rules as
-    * [[SimHash64]], different per-token hash). */
-  def simhash(tokens: ArrayData): Long = {
+/** `md5_long(string) → bigint` — see [[Md5Hash.hash]]. */
+case class Md5Long(child: Expression) extends NativeUnary[UTF8String, Long] {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"md5_long expects string, got ${other.catalogString}")
+  }
+  override def dataType: DataType = LongType
+  override def prettyName: String = "md5_long"
+
+  def kernel(in: UTF8String): Long = Md5Hash.hash(in)
+
+  override protected def withNewChildInternal(newChild: Expression): Md5Long =
+    copy(child = newChild)
+}
+
+/** `simhash_md5(array<string>) → bigint` — 64-bit SimHash with MD5 token
+  * hashes: each non-null token votes +1/−1 per bit of its [[Md5Hash.hash]];
+  * a bit is set when its tally is ≥ 0. */
+case class SimHashMd5(child: Expression) extends NativeUnary[ArrayData, Long] {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"simhash_md5 expects array<string>, got ${other.catalogString}")
+  }
+  override def dataType: DataType = LongType
+  override def prettyName: String = "simhash_md5"
+
+  def kernel(tokens: ArrayData): Long = {
     val tally = new Array[Int](64)
     val n = tokens.numElements()
     var i = 0
     while (i < n) {
       if (!tokens.isNullAt(i)) {
-        val h = hash(tokens.getUTF8String(i))
+        val h = Md5Hash.hash(tokens.getUTF8String(i))
         var b = 0
         while (b < 64) {
           if (((h >>> b) & 1L) == 1L) tally(b) += 1 else tally(b) -= 1
@@ -61,49 +87,6 @@ object Md5Hash {
     }
     out
   }
-}
-
-/** `md5_long(string) → bigint` — see [[Md5Hash.hash]]. */
-case class Md5Long(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"md5_long expects string, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "md5_long"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Md5Hash.hash(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cls = Md5Hash.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $cls.hash($c);"
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Long =
-    copy(child = newChild)
-}
-
-/** `simhash_md5(array<string>) → bigint` — see [[Md5Hash.simhash]]. */
-case class SimHashMd5(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash_md5 expects array<string>, got ${other.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash_md5"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Md5Hash.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cls = Md5Hash.getClass.getName.stripSuffix("$") + "$.MODULE$"
-      s"${ev.value} = $cls.simhash($c);"
-    })
 
   override protected def withNewChildInternal(newChild: Expression): SimHashMd5 =
     copy(child = newChild)

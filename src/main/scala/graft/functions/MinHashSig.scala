@@ -1,13 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression: `minhash_sig(array<string>) → array<bigint>`,
   * the 128-permutation MinHash signature of a shingle set.
@@ -27,7 +23,7 @@ import org.apache.spark.sql.SparkSessionExtensions
   * signatures are stable across the implementations.
   */
 case class MinHashSig(child: Expression, numPerms: Int = 128)
-    extends UnaryExpression {
+    extends NativeUnary[ArrayData, ArrayData] {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
@@ -37,8 +33,7 @@ case class MinHashSig(child: Expression, numPerms: Int = 128)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  def kernel(arr: ArrayData): ArrayData = {
     val sig = new Array[Long](numPerms)
     java.util.Arrays.fill(sig, Long.MaxValue)
     var i = 0
@@ -55,152 +50,6 @@ case class MinHashSig(child: Expression, numPerms: Int = 128)
     ArrayData.toArrayData(sig)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val xxh = classOf[XXH64].getName
-      val sig = ctx.freshName("sig")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val h = ctx.freshName("h")
-      val hp = ctx.freshName("hp")
-      s"""
-        long[] $sig = new long[$numPerms];
-        java.util.Arrays.fill($sig, Long.MAX_VALUE);
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          long $h = $xxh.hashUTF8String($c.getUTF8String($i), 42L);
-          for (int $p = 0; $p < $numPerms; $p++) {
-            long $hp = $xxh.hashLong($h, (long) $p);
-            if ($hp < $sig[$p]) $sig[$p] = $hp;
-          }
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($sig);
-      """
-    })
-
   override protected def withNewChildInternal(newChild: Expression): MinHashSig =
     copy(child = newChild)
-}
-
-/** Engine function registry: injectable via [[GraftExtensions]]
-  * (`SparkSessionExtensions`, the library-user path) or registered directly
-  * on an existing session (the path the query registry uses, so any plain
-  * session works). */
-object GraftFunctions {
-
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
-    Seq(
-      (FunctionIdentifier("minhash_sig"),
-        new ExpressionInfo(classOf[MinHashSig].getCanonicalName, "minhash_sig"),
-        // 1-arg: default 128 perms. 2-arg: minhash_sig(sh, numPerms) — the
-        // permutation family is indexed per-perm, so a longer signature is a
-        // superset (identical prefix) of a shorter one.
-        (children: Seq[Expression]) => children match {
-          case Seq(c) => MinHashSig(c)
-          case Seq(c, org.apache.spark.sql.catalyst.expressions.Literal(n, _)) =>
-            MinHashSig(c, n.toString.toInt)
-          case _ => throw new IllegalArgumentException(
-            "minhash_sig(array<string>[, numPerms literal])")
-        }),
-      (FunctionIdentifier("band_hashes"),
-        new ExpressionInfo(classOf[BandHashes].getCanonicalName, "band_hashes"),
-        (children: Seq[Expression]) => children match {
-          case Seq(c,
-            org.apache.spark.sql.catalyst.expressions.Literal(r, _),
-            org.apache.spark.sql.catalyst.expressions.Literal(b, _)) =>
-            BandHashes(c, r.toString.toInt, b.toString.toInt)
-          case _ => throw new IllegalArgumentException(
-            "band_hashes(array<bigint>, r literal, b literal)")
-        }),
-      (FunctionIdentifier("bpe_token_count"),
-        new ExpressionInfo(classOf[BpeTokenCount].getCanonicalName, "bpe_token_count"),
-        (children: Seq[Expression]) => {
-          import org.apache.spark.sql.catalyst.expressions.Literal
-          import org.apache.spark.sql.types.StringType
-          require(children.nonEmpty && (children.size - 1) % 2 == 0,
-            "bpe_token_count(array<string>, (a, b) literal pairs...)")
-          val pairs = children.drop(1).grouped(2).map {
-            case Seq(Literal(a, StringType), Literal(b, StringType))
-                if a != null && b != null =>
-              (a.toString, b.toString)
-            case other => throw new IllegalArgumentException(
-              s"bpe_token_count merge pair must be string literals, got $other")
-          }.toSeq
-          BpeTokenCount(children.head, pairs)
-        }),
-      (FunctionIdentifier("pq_encode"),
-        new ExpressionInfo(classOf[PqEncode].getCanonicalName, "pq_encode"),
-        (children: Seq[Expression]) => PqEncode(children(0), children(1))),
-      (FunctionIdentifier("pq_recon_err"),
-        new ExpressionInfo(classOf[PqReconErr].getCanonicalName, "pq_recon_err"),
-        (children: Seq[Expression]) => PqReconErr(children(0), children(1))),
-      (FunctionIdentifier("pq_adc"),
-        new ExpressionInfo(classOf[PqAdc].getCanonicalName, "pq_adc"),
-        (children: Seq[Expression]) => PqAdc(children(0), children(1))),
-      (FunctionIdentifier("hyperplane_codes"),
-        new ExpressionInfo(classOf[HyperplaneCodes].getCanonicalName, "hyperplane_codes"),
-        (children: Seq[Expression]) => HyperplaneCodes(children.head)),
-      (FunctionIdentifier("intersect_count"),
-        new ExpressionInfo(classOf[IntersectCount].getCanonicalName, "intersect_count"),
-        (children: Seq[Expression]) => IntersectCount(children(0), children(1))),
-      (FunctionIdentifier("gopher_stats"),
-        new ExpressionInfo(classOf[GopherStats].getCanonicalName, "gopher_stats"),
-        (children: Seq[Expression]) => GopherStats(children(0), children(1))),
-      (FunctionIdentifier("rocchio_best"),
-        new ExpressionInfo(classOf[RocchioBest].getCanonicalName, "rocchio_best"),
-        (children: Seq[Expression]) => RocchioBest(children(0), children(1))),
-      (FunctionIdentifier("vec_l2sq"),
-        new ExpressionInfo(classOf[VecL2Sq].getCanonicalName, "vec_l2sq"),
-        (children: Seq[Expression]) => VecL2Sq(children(0), children(1))),
-      (FunctionIdentifier("vec_cosine"),
-        new ExpressionInfo(classOf[VecCosine].getCanonicalName, "vec_cosine"),
-        (children: Seq[Expression]) => VecCosine(children(0), children(1))),
-      (FunctionIdentifier("poly_fingerprint"),
-        new ExpressionInfo(classOf[PolyFingerprint].getCanonicalName, "poly_fingerprint"),
-        (children: Seq[Expression]) => PolyFingerprint(children.head)),
-      (FunctionIdentifier("simhash64"),
-        new ExpressionInfo(classOf[SimHash64].getCanonicalName, "simhash64"),
-        (children: Seq[Expression]) => SimHash64(children.head)),
-      (FunctionIdentifier("md5_long"),
-        new ExpressionInfo(classOf[Md5Long].getCanonicalName, "md5_long"),
-        (children: Seq[Expression]) => Md5Long(children.head)),
-      (FunctionIdentifier("simhash_md5"),
-        new ExpressionInfo(classOf[SimHashMd5].getCanonicalName, "simhash_md5"),
-        (children: Seq[Expression]) => SimHashMd5(children.head)),
-      (FunctionIdentifier("hyperplane_codes_md5"),
-        new ExpressionInfo(classOf[HyperplaneCodesMd5].getCanonicalName, "hyperplane_codes_md5"),
-        (children: Seq[Expression]) => HyperplaneCodesMd5(children.head)),
-      (FunctionIdentifier("cdc_chunks"),
-        new ExpressionInfo(classOf[CdcChunks].getCanonicalName, "cdc_chunks"),
-        (children: Seq[Expression]) => CdcChunks(children.head)),
-      (FunctionIdentifier("token_windows"),
-        new ExpressionInfo(classOf[TokenWindows].getCanonicalName, "token_windows"),
-        (children: Seq[Expression]) =>
-          TokenWindows(children(0), children(1), children(2))))
-
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-}
-
-/** `SparkSession.builder.withExtensions(new GraftExtensions)` — or via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(extensions: SparkSessionExtensions): Unit = {
-    GraftFunctions.functions.foreach(extensions.injectFunction)
-    // Constraint-aware optimizations Spark can't do without declared
-    // PK/FK metadata (see graft.plans.JoinElimination).
-    extensions.injectOptimizerRule(graft.plans.EliminatePkFkJoin)
-    // Automatic data skipping: point-predicate scans over tables
-    // registered with SkippingIndex.enableAutoPrune read only candidate
-    // files (see graft.plans.ConsultSkippingIndex).
-    extensions.injectOptimizerRule(graft.plans.ConsultSkippingIndex)
-    // Materialized-view rollup rewrite: subsumed aggregates over a
-    // registered fact table re-point at its partial-aggregate rollup
-    // (see graft.plans.MaterializedView).
-    extensions.injectOptimizerRule(graft.plans.RewriteToMv)
-    // Whole-operator extension: native sort-merge as-of join
-    // (see graft.plans.AsofJoin).
-    extensions.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
-  }
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,7 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * an interpreted fold per window — O(len × 8) work that previously ran on
   * the expression interpreter.
   */
-case class PolyFingerprint(child: Expression) extends UnaryExpression {
+case class PolyFingerprint(child: Expression)
+    extends NativeUnary[UTF8String, ArrayData] {
+  import PolyFingerprint.{Mod, WindowLen}
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -33,30 +34,9 @@ case class PolyFingerprint(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "poly_fingerprint"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
-    ArrayData.toArrayData(PolyFingerprint.compute(s))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cls = classOf[PolyFingerprint].getName
-      s"""
-        ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-          $cls.compute($c.toString()));
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): PolyFingerprint =
-    copy(child = newChild)
-}
-
-object PolyFingerprint {
-  private final val Mod = 1000000007L
-  private final val WindowLen = 8
-
-  /** [full_hash, min_window_hash] — shared by eval and generated code. */
-  def compute(s: String): Array[Long] = {
+  /** [full_hash, min_window_hash]. */
+  def kernel(in: UTF8String): ArrayData = {
+    val s = in.toString
     val n = s.length
     var full = 0L
     var i = 0
@@ -74,6 +54,14 @@ object PolyFingerprint {
       w += 1
     }
     // (n == 0 falls out naturally: one empty window → minWin = 0)
-    Array(full, minWin)
+    ArrayData.toArrayData(Array(full, minWin))
   }
+
+  override protected def withNewChildInternal(newChild: Expression): PolyFingerprint =
+    copy(child = newChild)
+}
+
+object PolyFingerprint {
+  private final val Mod = 1000000007L
+  private final val WindowLen = 8
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -22,7 +21,7 @@ import org.apache.spark.sql.types._
   * 8×16 per-query distance table — Σ_s dtab[s·16 + code_s], s ascending.
   */
 case class PqEncode(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeBinary[ArrayData, ArrayData, ArrayData] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -37,7 +36,7 @@ case class PqEncode(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
 
-  def encode(veData: ArrayData, cbData: ArrayData): ArrayData = {
+  def kernel(veData: ArrayData, cbData: ArrayData): ArrayData = {
     val nCb = cbData.numElements()
     // Decode the codebook once per call: (c, vc) pairs in array order
     // (callers sort_array by c, so iteration order == ascending c).
@@ -75,14 +74,6 @@ case class PqEncode(left: Expression, right: Expression)
     new GenericArrayData(out)
   }
 
-  override protected def nullSafeEval(ve: Any, cb: Any): Any =
-    encode(ve.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqEncode", this, classOf[PqEncode].getName)
-    nullSafeCodeGen(ctx, ev, (v, c) => s"${ev.value} = $ref.encode($v, $c);")
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqEncode =
     copy(left = newLeft, right = newRight)
@@ -93,7 +84,7 @@ case class PqEncode(left: Expression, right: Expression)
   * arithmetic to encode-then-re-measure (the chosen codeword's distance is
   * the fold's minimum, bit-for-bit), s ascending, left-to-right adds. */
 case class PqReconErr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeBinary[ArrayData, ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     PqEncode(left, right).checkInputDataTypes() match {
@@ -104,7 +95,7 @@ case class PqReconErr(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_recon_err"
 
-  def reconErr(veData: ArrayData, cbData: ArrayData): Double = {
+  def kernel(veData: ArrayData, cbData: ArrayData): Double = {
     val nCb = cbData.numElements()
     val vcs = new Array[Array[Double]](nCb)
     var w = 0
@@ -136,21 +127,13 @@ case class PqReconErr(left: Expression, right: Expression)
     acc
   }
 
-  override protected def nullSafeEval(ve: Any, cb: Any): Any =
-    reconErr(ve.asInstanceOf[ArrayData], cb.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqReconErr", this, classOf[PqReconErr].getName)
-    nullSafeCodeGen(ctx, ev, (v, c) => s"${ev.value} = $ref.reconErr($v, $c);")
-  }
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqReconErr =
     copy(left = newLeft, right = newRight)
 }
 
 case class PqAdc(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeBinary[ArrayData, ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -162,7 +145,7 @@ case class PqAdc(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc"
 
-  def adc(dtabData: ArrayData, codeData: ArrayData): Double = {
+  def kernel(dtabData: ArrayData, codeData: ArrayData): Double = {
     var acc = 0.0
     var s = 0
     while (s < 8) {
@@ -170,14 +153,6 @@ case class PqAdc(left: Expression, right: Expression)
       s += 1
     }
     acc
-  }
-
-  override protected def nullSafeEval(dtab: Any, code: Any): Any =
-    adc(dtab.asInstanceOf[ArrayData], code.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("pqAdc", this, classOf[PqAdc].getName)
-    nullSafeCodeGen(ctx, ev, (d, c) => s"${ev.value} = $ref.adc($d, $c);")
   }
 
   override protected def withNewChildrenInternal(

@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -32,7 +31,7 @@ import org.apache.spark.sql.types._
   * the real corpus; TrainingSpec and the oracle check the consumers.
   */
 case class RocchioBest(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends NativeBinary[ArrayData, ArrayData, InternalRow] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -52,23 +51,7 @@ case class RocchioBest(left: Expression, right: Expression)
     StructField("clabel", StringType, nullable = true)))
   override def prettyName: String = "rocchio_best"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    RocchioOps.best(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.RocchioOps.best($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RocchioBest =
-    copy(left = newLeft, right = newRight)
-}
-
-object RocchioOps {
-
-  /** See [[RocchioBest]]. `cs` structs are (clabel string, c array<double>,
-    * nc2 double); returns (cosine double, clabel string). */
-  def best(toksh: ArrayData, cs: ArrayData): InternalRow = {
+  def kernel(toksh: ArrayData, cs: ArrayData): InternalRow = {
     val nt = toksh.numElements()
     // ‖f‖²: run-length squares over the sorted buckets, summed in run
     // order (ascending bucket value), exactly like the sorted-array fold.
@@ -117,4 +100,8 @@ object RocchioOps {
     }
     new GenericInternalRow(Array[Any](bestCos, bestLabel))
   }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): RocchioBest =
+    copy(left = newLeft, right = newRight)
 }

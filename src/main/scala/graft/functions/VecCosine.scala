@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -19,7 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * strict comparisons → phantom cell), top-k ranking (engines order NaN
   * differently), threshold filters. The oracles mirror the same guard.
   */
-case class VecCosine(left: Expression, right: Expression) extends BinaryExpression {
+case class VecCosine(left: Expression, right: Expression)
+    extends NativeBinary[ArrayData, ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -31,9 +31,7 @@ case class VecCosine(left: Expression, right: Expression) extends BinaryExpressi
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_cosine"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val va = a.asInstanceOf[ArrayData]
-    val vb = b.asInstanceOf[ArrayData]
+  def kernel(va: ArrayData, vb: ArrayData): Double = {
     val n = math.min(va.numElements(), vb.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -45,27 +43,6 @@ case class VecCosine(left: Expression, right: Expression) extends BinaryExpressi
     if (na == 0.0 || nb == 0.0) 0.0
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = $a.getDouble($i); double $y = $b.getDouble($i);
-          $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-        }
-        ${ev.value} = ($na == 0.0 || $nb == 0.0)
-          ? 0.0 : $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-      """
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecCosine =

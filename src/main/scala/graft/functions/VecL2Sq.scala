@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -21,7 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * real embeddings). Like [[VecCosine]], the loop runs over the common
   * prefix; every declared caller feeds equal-length (64-dim) vectors.
   */
-case class VecL2Sq(left: Expression, right: Expression) extends BinaryExpression {
+case class VecL2Sq(left: Expression, right: Expression)
+    extends NativeBinary[ArrayData, ArrayData, Double] {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -33,9 +33,7 @@ case class VecL2Sq(left: Expression, right: Expression) extends BinaryExpression
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_l2sq"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val va = a.asInstanceOf[ArrayData]
-    val vb = b.asInstanceOf[ArrayData]
+  def kernel(va: ArrayData, vb: ArrayData): Double = {
     val n = math.min(va.numElements(), vb.numElements())
     var acc = 0.0
     var i = 0
@@ -46,23 +44,6 @@ case class VecL2Sq(left: Expression, right: Expression) extends BinaryExpression
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $acc = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $d = $a.getDouble($i) - $b.getDouble($i);
-          $acc += $d * $d;
-        }
-        ${ev.value} = $acc;
-      """
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecL2Sq =

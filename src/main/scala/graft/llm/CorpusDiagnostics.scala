@@ -45,7 +45,6 @@ object CorpusDiagnostics extends QueryModule {
   /** Duplicated k-token spans: windows → corpus-duplicated windows →
     * per-doc maximal islands of adjacent duplicated positions. */
   def dupSpans(docsDf: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     // §2.5 widening: the window derivation (tokenize + k-gram md5 per
     // position) is the query's CPU and the fixture scan is one row group.
     val wins = graft.api.Fanout.widenBy(
@@ -78,7 +77,6 @@ object CorpusDiagnostics extends QueryModule {
 
   /** Distinct (source, gram-hash) postings for word n-grams of size `n`. */
   private def sourceGrams(docsDf: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     // (Round 15 measured a Fanout widen here and REVERTED it: the gram
     // derivation feeds a self-join whose shuffles dominate — the widen's
     // extra exchange was a flat-to-negative suite delta.)
@@ -152,7 +150,6 @@ object CorpusDiagnostics extends QueryModule {
     "llm_vocab_growth" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val base = docs(s, dir)
           .withColumn("toks", split(lower(col("text")), "\\s+"))
           .withColumn("ng", greatest(size(col("toks")) - 2, lit(1)))

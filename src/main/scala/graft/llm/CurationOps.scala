@@ -63,7 +63,6 @@ object CurationOps extends QueryModule {
   /** PPS Poisson sample at expected budget `b` with weight column `w`
     * (positive integer). Inclusion: h·ΣW < b·2³²·w in exact integers. */
   def weightedSample(docsDf: DataFrame, b: Int, salt: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val tot = docsDf.agg(sum(col("n_chars")).cast("long").as("totw"))
     docsDf
       .crossJoin(broadcast(tot))
@@ -117,7 +116,6 @@ object CurationOps extends QueryModule {
     * content-addressed hash order (deterministic on both engines). */
   def evalSetIds(docsDf: DataFrame, evalSource: String,
       maxEvalDocs: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     docsDf.filter(col("source") === evalSource)
       .select(col("doc_id"), expr(
         "md5_long(concat('eval:', CAST(doc_id AS STRING))) & 4294967295")
@@ -128,7 +126,6 @@ object CurationOps extends QueryModule {
 
   def decontaminateFuzzy(docsDf: DataFrame, evalSource: String,
       tau: Double, maxEvalDocs: Int = 2000): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val evalIds = evalSetIds(docsDf, evalSource, maxEvalDocs)
     // Bands/sets are pure per-document functions, so each side is hashed
     // from ITS OWN slice — the eval passes run at eval-set scale (hashing
@@ -176,7 +173,6 @@ object CurationOps extends QueryModule {
     // `hash & (n-1)` is only a uniform modulus for powers of two.
     require(nShards > 0 && (nShards & (nShards - 1)) == 0,
       s"nShards must be a power of two, got $nShards")
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val w = Window.partitionBy(col("shard")).orderBy(col("pri"), col("doc_id"))
     docsDf
       .withColumn("shard", expr(
@@ -199,7 +195,6 @@ object CurationOps extends QueryModule {
   def curriculumExport(docsDf: DataFrame, nShards: Int, salt: String): DataFrame = {
     require(nShards > 0 && (nShards & (nShards - 1)) == 0,
       s"nShards must be a power of two, got $nShards")
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     val w = Window.partitionBy(col("phase"), col("shard"))
       .orderBy(col("pri"), col("doc_id"))
     docsDf

@@ -277,7 +277,6 @@ object Dedup extends QueryModule {
     * 4×32 produces the same bands as the historical fixed-128 form). */
   def bandsOf(corpus: DataFrame, r: Int = 4, b: Int = 32): DataFrame = {
     require(r * b <= 1024, s"r*b = ${r * b} exceeds the 1024-perm sanity cap")
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // band_hashes = the native codegen spelling of
     // transform(sequence(0, b-1), bb -> xxhash64(<r sig slices>)) — the HOF
     // form ran interpreted in every LSH candidate build (guide §4 / round-15
@@ -317,7 +316,6 @@ object Dedup extends QueryModule {
     // built a boxed hash set AND the intersection array per candidate
     // pair — 24.9 s task time + 2.0 s GC on eval_lsh's verify stage at
     // sf0.1. intersect_count ≡ it bit-for-bit (IntersectCountSpec).
-    graft.functions.GraftFunctions.register(cand.sparkSession)
     cand
       .hint("merge")
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sa"), col("n").as("na")), "doc_a")
@@ -406,7 +404,6 @@ object Dedup extends QueryModule {
     * `docCounted` supplies the corpus row count for the relative rarity
     * threshold (any one-row-per-document frame works). */
   def containmentPairsFromKeys(sh: DataFrame, docCounted: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(sh.sparkSession)
     // RELATIVE rarity threshold: max(500, |docs| / 2000). A fixed absolute
     // df cut degenerates when the vocabulary saturates — at sf30 (~4.5M
     // near-corpus docs over the fixture's 31-word vocab) mean shingle df
@@ -648,7 +645,6 @@ object Dedup extends QueryModule {
     * Same output as verifyPairs (same joins, different physical strategy). */
   private def verifyPairsBroadcast(cand: DataFrame, sets: DataFrame,
       tau: Double = 0.8): DataFrame = {
-    graft.functions.GraftFunctions.register(cand.sparkSession)
     broadcast(broadcast(cand)
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sa"), col("n").as("na")), "doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sb"), col("n").as("nb")), "doc_b")
@@ -656,18 +652,6 @@ object Dedup extends QueryModule {
       .withColumn("jaccard", col("i").cast("double") / (col("na") + col("nb") - col("i")))
       .filter(col("jaccard") >= tau)
       .select("doc_a", "doc_b", "jaccard")
-  }
-
-  /** 64-bit SimHash over word tokens — the native codegen expression
-    * [[graft.functions.SimHash64]]: one loop per document, no row
-    * expansion, no aggregation shuffles. (xxhash64-based: the fast
-    * non-oracle path; [[simhashMd5Pairs]] is the differential-checked
-    * variant.) */
-  def simhashed(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
-    corpus
-      .withColumn("toks", split(col("text"), "\\s+"))
-      .select(col("doc_id"), expr("simhash64(toks)").as("simhash"))
   }
 
   /** Per-(chunk index, chunk value) bucket cap for the SimHash candidate
@@ -680,7 +664,6 @@ object Dedup extends QueryModule {
     * fingerprints — bit-identical to the DuckDB oracle's reconstruction —
     * and the [[simhashBucketCap]] guard on the chunk join. */
   def simhashMd5Pairs(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     simhashPairsFromHashes(corpus
       .withColumn("toks", split(col("text"), "\\s+"))
       .select(col("doc_id"), expr("simhash_md5(toks)").as("simhash")))
@@ -891,7 +874,6 @@ object Dedup extends QueryModule {
     // band (the llm_dedup_embed precedent).
     "llm_dedup_semantic" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val corpus = embCorpus(s, dir)
         val drops = embNearDupPairs(corpus)
           .select(col("vec_b").as("vec_id")).distinct()
@@ -1238,7 +1220,6 @@ object Dedup extends QueryModule {
     // hash-bucket sample. One oracle checks the whole composition.
     "llm_curate_e2e" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val f = plainFeat(s, dir)
         val survivors = keepSet(f, minhashPairsFeat(f))
         docs(s, dir)
@@ -1327,7 +1308,6 @@ object Dedup extends QueryModule {
     // ANN. floor(x+0.5) rounding keeps both engines bit-identical.
     "llm_embed_quantize" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .withColumn("ve", VectorOps.asDouble("embedding"))
         e.select(col("vec_id"), col("ve"))
@@ -1391,7 +1371,6 @@ object Dedup extends QueryModule {
     // broadcast semi-join — no corpus×corpus work anywhere.
     "llm_dataset_split" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val d = Tables.load(s, dir, "documents")
         val pairs = lshJaccardPairsFeat(plainFeat(s, dir), tau = 0.8, r = 4, b = 64)
           .select("doc_a", "doc_b")

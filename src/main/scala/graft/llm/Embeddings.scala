@@ -93,7 +93,6 @@ object Embeddings extends QueryModule {
     // decimal mean — no sampling randomness, no driver state.
     "llm_embed_matryoshka" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .withColumn("ve", VectorOps.asDouble("embedding"))
           .select(col("vec_id"), col("ve"))
@@ -159,7 +158,6 @@ object Embeddings extends QueryModule {
     // map-side codegen work; the corpus never shuffles.
     "llm_embed_project" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // The ±1 sign matrix is a CONSTANT (md5 of 'rp:j:i' — row-
         // independent), yet the historical HOF spelling recomputed all
         // 16×64 md5 hashes per row inside interpreted lambdas: one
@@ -265,7 +263,6 @@ object Embeddings extends QueryModule {
     // shuffle (explode + group), integer-exact values.
     "llm_text_hashvec" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         Tables.load(s, dir, "documents")
           .select(col("doc_id"),
             explode(split(lower(col("text")), "\\s+")).as("tok"))
@@ -304,7 +301,6 @@ object Embeddings extends QueryModule {
     "llm_embed_kmeans" -> QuerySpec(
       fn = (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .withColumn("ve", VectorOps.asDouble("embedding"))
           .select("vec_id", "ve")
@@ -361,7 +357,6 @@ object Embeddings extends QueryModule {
     "llm_cluster_cards" -> QuerySpec(
       fn = (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .withColumn("ve", VectorOps.asDouble("embedding"))
           .select("vec_id", "ve")
@@ -457,7 +452,6 @@ object Embeddings extends QueryModule {
     "llm_sample_balanced" -> QuerySpec(
       fn = (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.GraftFunctions.register(s)
         val e = Tables.load(s, dir, "embeddings")
           .withColumn("ve", VectorOps.asDouble("embedding"))
           .select("vec_id", "ve")
@@ -523,7 +517,6 @@ object Embeddings extends QueryModule {
         import org.apache.spark.sql.DataFrame
         import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.types.DecimalType
-        graft.functions.GraftFunctions.register(s)
         ensureCheckpointDir(s)
         // (Round 15 measured a Fanout widen here and REVERTED it: each
         // unrolled Lloyd round re-reads the scan, so the widen's shuffle

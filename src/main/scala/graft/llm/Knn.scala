@@ -41,7 +41,6 @@ object Knn extends QueryModule {
 
   /** Exact top-k for queries (vec_id < 20) over the full corpus. */
   def bruteTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(queries
       .select(col("vec_id").as("query_id"), col("ve").as("vq")))
     val scored = corpus.join(q, col("vec_id") =!= col("query_id"))
@@ -91,7 +90,6 @@ object Knn extends QueryModule {
     *     oracle's window (`ORDER BY sim DESC, cent_id`). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
       sampleMod: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val cents = corpus.filter(col("vec_id") % sampleMod === 0)
       .select(col("vec_id").as("cent_id"), col("ve").as("vc"))
     val quant = Quantizer.quantizer(cents)
@@ -156,7 +154,6 @@ object Knn extends QueryModule {
     // Encode: per subspace, fold the codeword array for the strict-min
     // distance (distances computed ONCE per codeword — HOF lambdas are not
     // CSE'd, so the (c, d) pairs are materialized before the argmin fold).
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Native codegen encode (round 15, guide §4): the HOF argmin fold ran
     // interpreted per vector; pq_encode is the identical program —
     // strict-min, c-ascending ties — as one tight loop (PqOpsSpec).
@@ -360,7 +357,6 @@ object Knn extends QueryModule {
     // ascending — no shuffle beyond the scan.
     "llm_embed_outliers" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val base = emb(s, dir)
         val n = base.count()
         val cents = base.filter(col("vec_id") % Quantizer.centroidModFor(n) === 0)

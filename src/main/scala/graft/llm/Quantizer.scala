@@ -69,7 +69,6 @@ object Quantizer {
     *
     * All windows run over ≤ nlist rows — single-partition by design. */
   def quantizer(cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(cents.sparkSession)
     val wAll = Window.partitionBy(lit(1))
     val ranked = cents
       .withColumn("rk", row_number().over(Window.orderBy("cent_id")) - 1)

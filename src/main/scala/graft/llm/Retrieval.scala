@@ -89,7 +89,6 @@ object Retrieval extends QueryModule {
   /** Cosine top-`k` of the corpus against one probe vector (`vec_id` =
     * `probeId`), excluding the probe itself. */
   def vectorTop(corpus: DataFrame, probeId: Long, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val qv = broadcast(corpus.filter(col("vec_id") === probeId)
       .select(col("ve").as("vq")))
     corpus.filter(col("vec_id") =!= probeId).crossJoin(qv)
@@ -120,7 +119,6 @@ object Retrieval extends QueryModule {
   /** Hard negatives: top-`k` most-similar corpus vectors with a different
     * label, per query vector. Query side broadcast; one corpus pass. */
   def hardNegatives(base: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(base.sparkSession)
     val q = broadcast(queries.select(
       col("vec_id").as("query_id"), col("label").as("qlabel"),
       col("ve").as("vq")))
@@ -138,7 +136,6 @@ object Retrieval extends QueryModule {
   /** Per-label centroids (exact-decimal dimension means) + each vector's
     * cosine to its OWN label's centroid; rank 1 = least prototypical. */
   def prototypicality(base: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(base.sparkSession)
     val cents = base
       .select(col("label"), posexplode(col("ve")).as(Seq("i", "x")))
       .groupBy(col("label"), col("i"))

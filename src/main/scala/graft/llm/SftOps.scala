@@ -253,7 +253,6 @@ object SftOps extends QueryModule {
     // train → parse → apply → mask chain is differential-checked.
     "llm_sft_bpe_tokens" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val merges = TextAnalysis.bpeTrainDf(s, dir).orderBy("round").collect()
           .map(r => (r.getString(1), r.getString(2)))
         def lit_(v: String) = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"

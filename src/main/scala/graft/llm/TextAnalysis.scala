@@ -155,7 +155,6 @@ object TextAnalysis extends QueryModule {
     // engines — bit-stable, no logs or per-token products.
     "llm_dsir_weights" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val toks = docs(s, dir)
           .select(col("doc_id"), col("lang"),
             explode(split(lower(col("text")), "\\s+")).as("term"))
@@ -748,7 +747,6 @@ object TextAnalysis extends QueryModule {
     // bit-for-bit (md5_long == md5_number_upper; see graft.functions.Md5Hash).
     "llm_sample_stratified" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         docs(s, dir)
           .withColumn("bucket",
             expr("md5_long(concat('smp42:', CAST(doc_id AS STRING))) & 1023"))
@@ -776,7 +774,6 @@ object TextAnalysis extends QueryModule {
         // One codegen pass per document ([[graft.functions.CdcChunks]]) —
         // same declarative semantics as the oracle below, minus the
         // interpreted per-window folds the HOF formulation paid.
-        graft.functions.GraftFunctions.register(s)
         docs(s, dir)
           .select(col("doc_id"), explode(expr("cdc_chunks(text)")).as("c"))
           .select(
@@ -830,7 +827,6 @@ object TextAnalysis extends QueryModule {
     // VIEW exactly like a built-in generator.
     "llm_udtf_windows" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         docs(s, dir).createOrReplaceTempView("documents")
         s.sql("""
           SELECT doc_id, w.win_id, w.tok_start, w.tok_count, w.win_text
@@ -860,7 +856,6 @@ object TextAnalysis extends QueryModule {
     // 8-char-window hash (the winnowing primitive).
     "llm_text_fingerprint" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // Native codegen expression (PolyFingerprint) — one loop per row;
         // the built-in equivalent is the interpreted fold in [[polyHash]].
         docs(s, dir)
@@ -995,7 +990,6 @@ object TextAnalysis extends QueryModule {
     // tiny and broadcast; the train side streams one scan.
     "llm_decontaminate" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val grams = docs(s, dir)
           .withColumn("toks", split(lower(col("text")), "\\s+"))
           .select(col("doc_id"), col("source"),
@@ -1037,7 +1031,6 @@ object TextAnalysis extends QueryModule {
     // (hash-exact, callers form the ratios).
     "llm_ngram_novelty" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // §2.5 widening: tokenize + trigram md5 behind a one-row-group
         // scan — spread the derivation; no-op at cluster scale.
         val perDoc = graft.api.Fanout.widenBy(
@@ -1093,7 +1086,6 @@ object TextAnalysis extends QueryModule {
     // as the salted top-k in operators/Skew.scala).
     "llm_source_cap" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("source")).orderBy(col("pri"), col("doc_id"))
         docs(s, dir)
@@ -1204,7 +1196,6 @@ object TextAnalysis extends QueryModule {
     // At 100 TB the model side is the small one and broadcasts.
     "llm_lm_score" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val trusted = Seq("src0", "src1", "src2", "src3", "src4")
         val grams = docs(s, dir)
           .withColumn("toks", split(lower(col("text")), "\\s+"))
@@ -1262,7 +1253,6 @@ object TextAnalysis extends QueryModule {
     // is unchanged.
     "llm_quality_classifier" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val toks = docs(s, dir)
           .select(col("doc_id"),
             explode(split(lower(col("text")), "\\s+")).as("tok"))
@@ -1304,7 +1294,6 @@ object TextAnalysis extends QueryModule {
     // O(parts × 100) memory, never a global sort, at any corpus size.
     "llm_sample_fixed" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         docs(s, dir)
           .withColumn("pri",
             expr("md5_long(concat('fix9:', CAST(doc_id AS STRING))) & 4294967295"))
@@ -1328,7 +1317,6 @@ object TextAnalysis extends QueryModule {
     // untouched chunks.
     "llm_chunk_dedup" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         docs(s, dir)
           .select(col("doc_id"), explode(expr("cdc_chunks(text)")).as("c"))
           .groupBy(col("c.hash").as("chunk_hash"), col("c.len").as("chunk_len"))
@@ -1417,7 +1405,6 @@ object TextAnalysis extends QueryModule {
     // literals (driver-side O(1) state, the k-means-centroid discipline).
     "llm_bpe_apply" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val merges = bpeTrainDf(s, dir).orderBy("round").collect()
           .map(r => (r.getString(1), r.getString(2)))
         def lit_(v: String) = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -1474,7 +1461,6 @@ object TextAnalysis extends QueryModule {
     // fertility ratio is ONE division of two exact integer sums.
     "llm_tokenizer_fertility" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val merges = bpeTrainDf(s, dir).orderBy("round").collect()
           .map(r => (r.getString(1), r.getString(2)))
         def lit_(v: String) = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -1539,7 +1525,6 @@ object TextAnalysis extends QueryModule {
     // records where each doc starts.
     "llm_pack_sequences" -> QuerySpec(
       fn = (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("shard")).orderBy(col("pri"), col("doc_id"))
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)

@@ -72,7 +72,6 @@ object TextFeatures {
     * signature/simhash fold in codegen'd native expressions; no shuffle
     * at all — pure per-document map work. */
   def build(corpus: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     corpus
       .withColumn("toks", split(col("text"), "\\s+"))
       .withColumn("shs", expr(
@@ -102,7 +101,6 @@ object TextFeatures {
   def bands(feat: DataFrame, r: Int = 4, b: Int = 32): DataFrame = {
     require(r * b <= SigPerms,
       s"r*b = ${r * b} exceeds the stored $SigPerms-perm signature")
-    graft.functions.GraftFunctions.register(feat.sparkSession)
     // Native codegen band identities — see [[Dedup.bandsOf]]; bit-identical
     // to the historical interpreted-HOF spelling (BandHashesSpec).
     feat.select(col("doc_id"), posexplode(expr(s"band_hashes(sig, $r, $b)")))

@@ -57,7 +57,6 @@ object Training extends QueryModule {
 
   /** (doc_id, label, toksh: hashed token buckets in token order). */
   def tokens(docsDf: DataFrame, labelCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docsDf.sparkSession)
     docsDf
       .withColumn("toks", split(lower(col("text")), "\\s+"))
       .select(col("doc_id"), col(labelCol).as("label"),
@@ -100,7 +99,6 @@ object Training extends QueryModule {
     * and ‖f‖² folds over the sorted array as run-length squares, so the
     * corpus-side pass is shuffle-free AND dense-vector-free. */
   def classify(toks: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(toks.sparkSession)
     val packed = cents
       .withColumn("nc2",
         expr("aggregate(c, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)"))

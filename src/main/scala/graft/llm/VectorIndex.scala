@@ -67,7 +67,6 @@ object VectorIndex {
     * so the spec can pin append ≡ assign-everything-at-once). */
   def assignCodes(
       vecs: DataFrame, centroids: DataFrame, codebook: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val cbArr = codebook.agg(
       sort_array(collect_list(struct(col("c"), col("vc")))).as("cb"))
     // Cell via the shared two-level walk (the Quantizer structure is
@@ -114,7 +113,6 @@ object VectorIndex {
         .select(col("vec_id"), col("cent_id").as("cell"), col("ve"))
         .persist()
       try {
-        graft.functions.GraftFunctions.register(spark)
         assigned.select(col("vec_id"), col("cell"), col("ve"))
           .write.mode("overwrite").parquet(s"$indexDir/lists/batch=$batchId")
         val cbArr = cb.agg(
@@ -149,7 +147,6 @@ object VectorIndex {
     * computed from accumulated pairs are arrival-order-independent.
     * Pairs are normalized (vec_a < vec_b); the increment side broadcasts. */
   def semanticPairs(incr: DataFrame, index: DataFrame, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(incr.sparkSession)
     val a = incr.select(col("cell"), col("vec_id").as("ia"), col("ve").as("va"))
     val vsIndex = broadcast(a)
       .join(index.select(col("cell"), col("vec_id").as("ib"), col("ve").as("vb")),
@@ -178,7 +175,6 @@ object VectorIndex {
     * one |cells|-row aggregate; means in exact DECIMAL so the report is
     * partitioning-independent. */
   def health(vecs: DataFrame, centroids: DataFrame, codebook: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val cbArr = codebook.agg(
       sort_array(collect_list(struct(col("c"), col("vc")))).as("cb"))
     // One map pass: cell + code + reconstruction error together (the
@@ -207,7 +203,6 @@ object VectorIndex {
       queries: DataFrame,
       k: Int,
       nprobe: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cb = spark.read.parquet(s"$indexDir/codebook")
     val cbArr = cb.agg(sort_array(collect_list(struct(col("c"), col("vc")))).as("cb"))

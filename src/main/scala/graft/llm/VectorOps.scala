@@ -16,9 +16,9 @@ object VectorOps {
   /** Cosine between two double-array columns — the native codegen
     * expression [[graft.functions.VecCosine]]. Accumulation is
     * left-to-right from zero, matching DuckDB's list_reduce, so scores are
-    * bit-identical to the oracle. Callers must have run
-    * `GraftFunctions.register` on the session (lshCoded and the query
-    * entry points do). */
+    * bit-identical to the oracle. Needs a session that carries the graft
+    * functions: one from `Graft.session`, or any other after
+    * `Graft.install`. */
   def cosine(a: String, b: String): Column = expr(s"vec_cosine($a, $b)")
 
   /** Random-hyperplane LSH codes over a double-array column `ve` — the
@@ -29,7 +29,6 @@ object VectorOps {
     * and DuckDB-reconstructible, which is what lets the ANN and embedding
     * dedup queries be differential-checked bit-for-bit. */
   def lshCoded(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(df.columns.toIndexedSeq.map(org.apache.spark.sql.functions.col) :+
       org.apache.spark.sql.functions.posexplode(expr("hyperplane_codes_md5(ve)")): _*)
       .withColumnRenamed("pos", "t")

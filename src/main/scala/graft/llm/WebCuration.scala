@@ -253,7 +253,6 @@ object WebCuration extends QueryModule {
   private val Stopwords = Seq("the", "a", "and", "to", "of", "in", "is", "that")
 
   def gopherGate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     docs(s, dir)
       .withColumn("toks0", split(lower(col("text")), "\\s+"))
       .withColumn("toks1",

@@ -95,7 +95,6 @@ object CountMin extends QueryModule {
     "rel_cms_agg" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val sketchUdaf = udaf(agg)
         val li = Tables.load(s, dir, "lineitem")
         // Fanout (keyed — no round-robin pre-sort; l_partkey is 20k-distinct
@@ -151,7 +150,6 @@ object CountMin extends QueryModule {
     "rel_cms_freq" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val li = Tables.load(s, dir, "lineitem")
         val seeds = expr("explode(sequence(0, 3))").as("i")
         // Fanout (keyed — no round-robin pre-sort): the explode×4 md5 grid

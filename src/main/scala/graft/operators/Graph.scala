@@ -464,9 +464,12 @@ object Graph extends QueryModule {
         nodes AS (SELECT n_name AS node, n_nationkey FROM nation),
         d0 AS (SELECT node, CASE WHEN n_nationkey = 0
                  THEN CAST(0 AS BIGINT) END AS d FROM nodes)"""
+        // MATERIALIZED: each round reads its predecessor twice, and DuckDB
+        // inlines an unmarked CTE at every reference — 2^8 copies of the
+        // edge join. The hint changes evaluation only, not the result.
         val iters = (1 to 8).map { k =>
           s"""
-        d$k AS (
+        d$k AS MATERIALIZED (
           SELECT node, MIN(d) AS d FROM (
             SELECT node, d FROM d${k - 1}
             UNION ALL
@@ -500,9 +503,10 @@ object Graph extends QueryModule {
           UNION ALL SELECT b, a FROM keep),
         nodes AS (SELECT n_name AS node FROM nation),
         l0 AS (SELECT node, node AS label FROM nodes)"""
+        // MATERIALIZED for the reason given at rel_graph_sssp.
         val iters = (1 to 8).map { k =>
           s"""
-        l$k AS (
+        l$k AS MATERIALIZED (
           SELECT node, MIN(label) AS label FROM (
             SELECT node, label FROM l${k - 1}
             UNION ALL

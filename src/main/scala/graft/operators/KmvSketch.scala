@@ -141,7 +141,6 @@ object KmvSketch extends QueryModule {
     "rel_kmv_distinct" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val sk = udaf(agg)
         val ev = Tables.load(s, dir, "events")
         // No fanout here: one md5 per row is ~1 µs — measured cheaper to
@@ -173,7 +172,6 @@ object KmvSketch extends QueryModule {
     "llm_kmv_overlap" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val sk = udaf(agg)
         val docs = Tables.load(s, dir, "documents")
         def side(cond: Column, name: String) = docs.filter(cond)
@@ -263,7 +261,6 @@ object KmvSketch extends QueryModule {
     "llm_kmv_matrix" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         val sk = udaf(agg)
         // Fanout: the 5-gram md5 pass is the CPU-heavy map stage and the
         // fixture scan is one row group — widen the narrow (source, text)
@@ -363,7 +360,6 @@ object KmvSketch extends QueryModule {
       fn = (s, dir) => {
         import s.implicits._
         import graft.streaming.KmvStream
-        graft.functions.GraftFunctions.register(s)
         val landing = graft.api.Scratch.dir("kmv_landing")
         val state = graft.api.Scratch.dir("kmv_state")
         val cp = graft.api.Scratch.dir("kmv_cp")

@@ -194,7 +194,6 @@ object MvQueries extends QueryModule {
       val head = ev.filter(pmod(col("user_id"), lit(10)) < 7)
       val tail = ev.filter(pmod(col("user_id"), lit(10)) >= 7)
       head.write.parquet(fact)
-      graft.functions.GraftFunctions.register(s) // md5_long in the partial
       MaterializedView.register(s, fact, hllDef(mv))
       tail.write.mode("append").parquet(fact)
       MaterializedView.appendDelta(s, fact, tail)
@@ -590,7 +589,6 @@ object MvQueries extends QueryModule {
       fn = (s, dir) => {
         import s.implicits._
         import graft.functions.Hll
-        graft.functions.GraftFunctions.register(s)
         val fact = ensureHllFact(s, dir)
         val regs = s.read.parquet(fact)
           .select($"event_type", expr(Hll.hpExpr("user_id")).as("hp"))

@@ -1725,7 +1725,6 @@ object RelationalQueries extends QueryModule {
       fn = (s, dir) => {
         import s.implicits._
         import graft.functions.Hll
-        graft.functions.GraftFunctions.register(s)
         val ev = t(s, dir, "events")
         val regs = ev.select($"event_type", expr(Hll.hpExpr("user_id")).as("hp"))
           .select($"event_type", expr(Hll.regExpr).as("reg"),
@@ -1772,7 +1771,6 @@ object RelationalQueries extends QueryModule {
     "rel_bloom_prune" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         // Build side: high-value urgent customers (~18% of the probe
         // population at every fixture scale) so the sketch prunes a real
         // non-member majority — bloom over ALL order-placers would be
@@ -3142,7 +3140,6 @@ object RelationalQueries extends QueryModule {
     "rel_aqp_sum" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         t(s, dir, "lineitem")
           .filter(expr(
             """(md5_long(concat('aqp:', CAST(l_orderkey AS STRING), '-',
@@ -3180,7 +3177,6 @@ object RelationalQueries extends QueryModule {
     "rel_aqp_group" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        graft.functions.GraftFunctions.register(s)
         Tables.load(s, dir, "events")
           .filter(expr(
             "(md5_long(concat('aqpg:', CAST(event_id AS STRING))) & 63) = 0"))

@@ -29,7 +29,8 @@ import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, Ti
   * `merge_asof(tolerance=...)` contract.
   *
   * Why a custom physical operator (ladder step (c): LogicalPlan +
-  * SparkStrategy + SparkPlan, injected by [[graft.functions.GraftExtensions]]):
+  * SparkStrategy + SparkPlan, injected by [[graft.functions.GraftExtensions]]
+  * or `graft.Graft.install`):
   * built-in spellings either theta-join on a time inequality (quadratic per
   * key) or union both streams through one window (linear, but it carries
   * every probe column through the sort and can't prune state columns until
@@ -266,17 +267,6 @@ object AsofJoin {
       s"asof direction must be one of ${Directions.mkString("/")}, got '$direction'")
     tolerance.foreach(t => require(t >= 0, s"asof tolerance must be >= 0, got $t"))
     val session = probes.sparkSession
-    // Library-user path for sessions built without GraftExtensions: the
-    // runtime strategy hook (same role GraftFunctions.register plays for
-    // expressions). Idempotent; harmless beside the injected strategy.
-    // Synchronized: extraStrategies is a read-modify-write on shared session
-    // state, and two threads building as-of frames concurrently could
-    // otherwise double-append (or lose) the strategy.
-    AsofJoin.synchronized {
-      if (!session.experimental.extraStrategies.contains(AsofJoinStrategy))
-        session.experimental.extraStrategies =
-          session.experimental.extraStrategies :+ AsofJoinStrategy
-    }
     // Null-keyed or null-timed state rows can never match under SQL equality
     // / comparison semantics (the oracle's ASOF ON c.k = p.k); filtering
     // them HERE (not in the merge) keeps the exec's null-safe orderings and

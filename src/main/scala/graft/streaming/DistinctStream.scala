@@ -39,7 +39,6 @@ object DistinctStream {
 
   /** Streaming transform: observation rows → newly-risen registers. */
   def newRegisters(events: DataFrame): Dataset[RegRow] = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
     implicit val obsEnc   = Encoders.product[RegObs]
     implicit val stateEnc = Encoders.product[RegState]
     implicit val outEnc   = Encoders.product[RegRow]

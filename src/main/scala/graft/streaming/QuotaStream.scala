@@ -60,7 +60,6 @@ object QuotaStream {
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String,
       capPerSource: Long): Unit = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val prior = priorSpend(spark, stateDir, batchId)
     val w = Window.partitionBy(col("source"))
       .orderBy(col("h"), col("doc_id"))

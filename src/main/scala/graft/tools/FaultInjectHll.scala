@@ -31,7 +31,6 @@ object FaultInjectHll {
     val base = if (args.length > 1) args(1) else "/tmp/graft_fault_hll"
     val spark = graft.GraftSession("graft-fault-hll")
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val landing = s"$base/landing"
     val out = s"$base/out"
     val cp = s"$base/cp"

@@ -199,7 +199,6 @@ object MvBench {
       // the maintained register MV (derived-measure MVs) — the direct plan
       // hashes every fact row per run; the served plan reads ≤ |types|·4096
       // register rows.
-      graft.functions.GraftFunctions.register(spark)
       import graft.functions.Hll
       val evFact = s"$scratch/ev_fact"
       spark.read.parquet(s"$dir/events.parquet")

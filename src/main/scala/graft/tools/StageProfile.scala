@@ -32,11 +32,8 @@ object StageProfile {
     spark.sparkContext.setLogLevel("ERROR")
 
     val stages = mutable.LinkedHashMap.empty[Int, StageRow]
-    val submitted = mutable.HashMap.empty[Int, Long]
     var collecting = false
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        submitted(e.stageInfo.stageId) = System.nanoTime()
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         if (!collecting) return
         val si = e.stageInfo

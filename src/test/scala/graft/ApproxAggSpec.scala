@@ -50,7 +50,6 @@ class ApproxAggSpec extends SparkSpec {
     // any two disjoint slices and max-merging must reproduce the
     // whole-corpus registers exactly — the property a 1000-executor
     // combine relies on.
-    graft.functions.GraftFunctions.register(spark)
     def registers(df: org.apache.spark.sql.DataFrame) = df
       .selectExpr("event_type",
         "md5_long(CAST(user_id AS STRING)) & 9223372036854775807 AS hp")

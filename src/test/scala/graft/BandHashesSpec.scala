@@ -16,7 +16,6 @@ class BandHashesSpec extends SparkSpec {
   }
 
   test("band_hashes equals the built-in xxhash64 fold for every stored signature") {
-    graft.functions.GraftFunctions.register(spark)
     val sigs = graft.llm.TextFeatures
       .features(spark, sfDir, "near").select(col("doc_id"), col("sig"))
     for ((r, b) <- Seq((4, 32), (4, 64), (3, 42))) {
@@ -30,7 +29,6 @@ class BandHashesSpec extends SparkSpec {
   }
 
   test("band_hashes on a synthetic signature matches hand-folded xxhash64") {
-    graft.functions.GraftFunctions.register(spark)
     val row = spark.sql(
       """SELECT band_hashes(array(1L, 2L, 3L, 4L, 5L, 6L), 3, 2) AS bh,
                 array(xxhash64(1L, 2L, 3L), xxhash64(4L, 5L, 6L)) AS ref""")

@@ -30,7 +30,6 @@ class BpeTokenCountSpec extends SparkSpec {
   }
 
   test("bpe_token_count equals the built-in program on the corpus with learned merges") {
-    graft.functions.GraftFunctions.register(spark)
     val merges = graft.llm.TextAnalysis.bpeTrainDf(spark, sfDir)
       .orderBy("round").collect().map(r => (r.getString(1), r.getString(2))).toSeq
     val ws = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -44,7 +43,6 @@ class BpeTokenCountSpec extends SparkSpec {
   }
 
   test("bpe_token_count matches the built-in on adversarial words") {
-    graft.functions.GraftFunctions.register(spark)
     val merges = Seq(("a", "b"), ("ab", "c"), ("|", "x"))
     // Words are non-empty per the call-site contract (every caller filters
     // length(w) >= 1; the built-in program itself degenerates on "" —

@@ -11,7 +11,6 @@ class CountMinSpec extends SparkSpec {
   test("CMS grids merge by SUM: sharded build == global build, and estimates never undercount") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val li = s.read.parquet(s"$sfDir/lineitem.parquet")
       .select($"l_orderkey", $"l_partkey")
     val seeds = expr("explode(sequence(0, 3))").as("i")
@@ -47,7 +46,6 @@ class CountMinSpec extends SparkSpec {
   test("registered cms_sketch aggregator is bit-identical to the query spelling's grid") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftFunctions.register(s)
     val li = s.read.parquet(s"$sfDir/lineitem.parquet")
     // Aggregator-built flat sketch.
     val cmsUdaf = udaf(graft.operators.CountMin.agg)

@@ -15,7 +15,6 @@ class DistinctStreamSpec extends SparkSpec {
     val landing = tempDir("hll-landing")
     val out = tempDir("hll-out")
     val cp = tempDir("hll-cp")
-    graft.functions.GraftFunctions.register(spark)
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
       .select("event_type", "user_id", "event_id")
 

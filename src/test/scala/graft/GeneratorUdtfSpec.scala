@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.execution.GenerateExec
 
 /** The UDTF surface ([[graft.functions.TokenWindows]], SURVEY §2.9):
@@ -13,7 +12,6 @@ class GeneratorUdtfSpec extends SparkSpec {
   import s0.implicits._
 
   private def windows(text: String, size: Int, stride: Int): Seq[(Int, Int, Int, String)] = {
-    GraftFunctions.register(spark)
     Seq(text).toDF("text").createOrReplaceTempView("one_doc")
     spark.sql(
       s"""SELECT w.win_id, w.tok_start, w.tok_count, w.win_text
@@ -38,7 +36,6 @@ class GeneratorUdtfSpec extends SparkSpec {
   }
 
   test("empty and null text generate no rows; LATERAL VIEW OUTER keeps the row") {
-    GraftFunctions.register(spark)
     Seq(("d1", "a b"), ("d2", "   "), ("d3", null))
       .toDF("doc_id", "text").createOrReplaceTempView("tw_docs")
     val inner = spark.sql(
@@ -53,7 +50,6 @@ class GeneratorUdtfSpec extends SparkSpec {
   }
 
   test("plans as GenerateExec (the streaming generator operator)") {
-    GraftFunctions.register(spark)
     Seq("a b c").toDF("text").createOrReplaceTempView("one_doc")
     val df = spark.sql(
       """SELECT w.t FROM one_doc
@@ -65,7 +61,6 @@ class GeneratorUdtfSpec extends SparkSpec {
   }
 
   test("non-constant size is rejected at analysis time") {
-    GraftFunctions.register(spark)
     Seq((1, "a b")).toDF("n", "text").createOrReplaceTempView("bad_tw")
     val e = intercept[Exception] {
       spark.sql(

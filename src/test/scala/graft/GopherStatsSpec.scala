@@ -1,19 +1,11 @@
 package graft
 
-import graft.functions.{GopherOps, GopherStats}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.BoundReference
-import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Pins the native `gopher_stats` expression against the HOF spelling it
   * replaced in the Gopher quality gates: `size`, a `length` fold, two
   * `rlike` filters and `size(array_intersect(array_distinct(toks), stops))`.
-  * Also checks that its generated code compiles: when it does not, Spark
-  * silently falls back to the interpreted path. */
+  * Its generated code is checked in NativeFunctionsSpec. */
 class GopherStatsSpec extends SparkSpec {
 
   private val stops = "array('the', 'a', 'and', 'to', 'of', 'in', 'is', 'that')"
@@ -27,7 +19,6 @@ class GopherStatsSpec extends SparkSpec {
 
   /** Rows where any of the five statistics differs from its HOF spelling. */
   private def divergent(toks: org.apache.spark.sql.DataFrame): Long = {
-    graft.functions.GraftFunctions.register(spark)
     val gs = toks.withColumn("gs", expr(s"gopher_stats(toks, $stops)"))
     gs.filter(legacy.map { case (f, e) =>
       not(col(s"gs.$f") <=> expr(e))
@@ -62,19 +53,5 @@ class GopherStatsSpec extends SparkSpec {
     assert(divergent(toks) === 0L, "gopher_stats diverged from the HOF spelling")
     val nullToks = spark.sql(s"SELECT gopher_stats(CAST(NULL AS ARRAY<STRING>), $stops) AS gs")
     assert(nullToks.head().isNullAt(0))
-  }
-
-  test("gopher_stats compiles in generated code") {
-    val arr = ArrayType(StringType, containsNull = true)
-    val expr = GopherStats(BoundReference(0, arr, nullable = true),
-      BoundReference(1, arr, nullable = true))
-    // Throws if janino cannot compile the generated call.
-    val proj = GenerateUnsafeProjection.generate(Seq(expr))
-    def strs(xs: String*) = new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
-    val in = InternalRow(strs("the", "###", "cat", "the"), strs("the", "a"))
-    val got = proj(in).getStruct(0, 5)
-    val want = GopherOps.stats(in.getArray(0), in.getArray(1))
-    assert((0 until 5).map(got.getInt) === (0 until 5).map(want.getInt))
-    assert((0 until 5).map(got.getInt) === Seq(4, 12, 1, 3, 1))
   }
 }

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class IntersectCountSpec extends SparkSpec {
 
   test("intersect_count equals size(array_intersect) on stored feature arrays") {
-    graft.functions.GraftFunctions.register(spark)
     val feat = graft.llm.TextFeatures.features(spark, sfDir, "near")
     // Cross a sample of real shingle-set pairs (every doc against a
     // rotated copy) — the exact arrays the verify joins intersect.
@@ -29,7 +28,6 @@ class IntersectCountSpec extends SparkSpec {
   }
 
   test("intersect_count matches array_intersect on duplicates, nulls, empties") {
-    graft.functions.GraftFunctions.register(spark)
     val cases = Seq(
       "array(1L, 2L, 3L)" -> "array(2L, 3L, 4L)",
       // duplicates on either side count once, like array_intersect

@@ -16,7 +16,6 @@ class KmvSketchSpec extends SparkSpec {
   private lazy val sk: UserDefinedFunction = udaf(KmvSketch.agg)
 
   private def hashed(ids: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     ids.selectExpr(s"${KmvSketch.hashExpr("id")} AS h")
   }
 
@@ -91,7 +90,6 @@ class KmvSketchSpec extends SparkSpec {
     val all = spark.range(0, 60000).toDF("id")
       .withColumn("g", (col("id") % 3).cast("string"))
     def obs(df: DataFrame) = {
-      graft.functions.GraftFunctions.register(spark)
       df.selectExpr("g", s"${KmvSketch.hashExpr("id")} AS h")
     }
     // Wave 1 drains; wave 2 lands later and a SECOND drain resumes from

@@ -589,7 +589,6 @@ class MaterializedViewSpec extends SparkSpec {
   test("HLL register MV: register build MV-served; delta fold ≡ one-shot sketch") {
     import graft.functions.Hll
     import graft.plans.MaterializedView.MvMaxD
-    graft.functions.GraftFunctions.register(spark)
     val fact = tempDir("mv_hll_fact") + "/fact"
     val ev = Tables.load(spark, sfDir, "events")
     val head = ev.filter(pmod(col("user_id"), lit(10)) < 7)

@@ -1,38 +1,27 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** The custom Catalyst expression must behave identically in its codegen
   * and interpreted paths, and degrade sanely on edge inputs. */
-class MinHashSigSpec extends SparkSpec {
+class MinHashSigSpec extends CodegenParity {
 
-  private def sigs(df: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(spark)
+  private def sigs(df: org.apache.spark.sql.DataFrame) =
     df.select(col("id"), expr("minhash_sig(sh)").as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-  }
 
   test("codegen and interpreted evaluation agree") {
     val s = spark
     import s.implicits._
-    val data = Seq(
-      (1L, Seq("a b c", "b c d", "c d e")),
-      (2L, Seq("a b c")),
-      (3L, Seq.empty[String])).toDF("id", "sh")
-
-    val gen = sigs(data)
-    val prev = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    val interp = try sigs(data)
-    finally spark.conf.set("spark.sql.codegen.factoryMode", prev)
-
-    assert(gen === interp)
-    assert(gen(1L).length === 128)
+    val in = Seq(Seq("a b c", "b c d", "c d e"), Seq("a b c"), Seq.empty[String]).toDF("sh")
+    // parity asserts generated == interpreted on every row.
+    val gen = parity(bound(in, expr("minhash_sig(sh)")), rowsOf(in))
+      .map(_.getArray(0).toLongArray().toSeq)
+    assert(gen.head.length === 128)
     // Empty shingle set → identity signature (all Long.MaxValue), not null.
-    assert(gen(3L).forall(_ == Long.MaxValue))
+    assert(gen(2).forall(_ == Long.MaxValue))
     // Signatures of overlapping sets share mins; disjoint positions differ.
-    assert(gen(1L).zip(gen(2L)).count { case (a, b) => a == b } > 0)
+    assert(gen(0).zip(gen(1)).count { case (a, b) => a == b } > 0)
   }
 
   test("signature min-property: superset signature is elementwise <=") {

@@ -27,7 +27,6 @@ class PqOpsSpec extends SparkSpec {
       (acc, s) -> acc + ${subdist("ve", "element_at(cb, element_at(bcode, s + 1) + 1).vc", "s")})"""
 
   private def corpus = {
-    graft.functions.GraftFunctions.register(spark)
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .withColumn("ve", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .select(col("vec_id"), col("ve"))

@@ -32,4 +32,17 @@ class RegistryDupSpec extends AnyFunSuite {
     // Declared set == runtime registry (nothing shadowed, nothing lost).
     assert(found.map(_._1).toSet == SparkEntry.queries.keySet)
   }
+
+  test("the engine is installed in one place: Graft.install, called only by Graft.query") {
+    val sources = scalaSources(new java.io.File("src/main/scala")) ++
+      scalaSources(new java.io.File("src/test/scala"))
+    def mentioning(needle: String, among: Seq[java.io.File]): Seq[String] =
+      among.filter(f => java.nio.file.Files.readString(f.toPath).contains(needle))
+        .map(_.getName)
+    // Split so this file does not match itself.
+    assert(mentioning("GraftFunctions." + "register", sources).isEmpty)
+    val main = scalaSources(new java.io.File("src/main/scala"))
+    assert(mentioning("Graft.install(", main).forall(_ == "Graft.scala"))
+    assert(mentioning("extraStrategies", main) === Seq("Graft.scala"))
+  }
 }

@@ -35,7 +35,6 @@ class RocchioBestSpec extends SparkSpec {
       a -> a.s + CAST(a.r * a.r AS DOUBLE))"""
 
   test("rocchio_best equals the HOF spelling on the real corpus") {
-    graft.functions.GraftFunctions.register(spark)
     val toks = graft.llm.Training.tokens(
       graft.sources.Tables.load(spark, sfDir, "documents"), "lang")
     val cents = graft.llm.Training.centroids(toks)
@@ -54,7 +53,6 @@ class RocchioBestSpec extends SparkSpec {
   }
 
   test("rocchio_best ties break to the smallest label; zero norms score 0.0") {
-    graft.functions.GraftFunctions.register(spark)
     // Two identical centroids under different labels: equal cosines, so
     // the smaller label must win. Empty token list: nf2 = 0 -> all
     // cosines 0.0 -> smallest label.

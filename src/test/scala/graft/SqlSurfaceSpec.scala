@@ -23,7 +23,6 @@ class SqlSurfaceSpec extends SparkSpec {
       "documents", "events").foreach { t =>
       Tables.load(spark, sfDir, t).createOrReplaceTempView(t)
     }
-    graft.functions.GraftFunctions.register(spark)
   }
 
   private def canon(df: DataFrame): (Seq[String], Seq[Seq[String]]) = {

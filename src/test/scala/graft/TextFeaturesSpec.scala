@@ -39,14 +39,12 @@ class TextFeaturesSpec extends SparkSpec {
   }
 
   test("stored simhash equals simhash_md5 of the tokenized text") {
-    graft.functions.GraftFunctions.register(spark)
     val fromText = near.withColumn("toks", split(col("text"), "\\s+"))
       .select(col("doc_id"), expr("simhash_md5(toks)").as("simhash"))
     assert(canon(feat.select("doc_id", "simhash")) === canon(fromText))
   }
 
   test("stored wins column explodes to the passage window-key rows") {
-    graft.functions.GraftFunctions.register(spark)
     val L = 40
     val fromText = near.filter(length(col("text")) > L)
       .select(col("doc_id"), explode(expr(
@@ -60,7 +58,6 @@ class TextFeaturesSpec extends SparkSpec {
   }
 
   test("stored shm column explodes to the md5-keyed shingle rows") {
-    graft.functions.GraftFunctions.register(spark)
     val fromText = near
       .withColumn("toks", split(col("text"), "\\s+"))
       .select(col("doc_id"), explode(expr(

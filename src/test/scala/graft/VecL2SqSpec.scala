@@ -13,7 +13,6 @@ class VecL2SqSpec extends SparkSpec {
       CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"""
 
   test("vec_l2sq equals the aggregate/zip_with fold on the real embeddings") {
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.sources.Tables.load(spark, sfDir, "embeddings")
       .withColumn("ve", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .select(col("vec_id"), col("ve"))
@@ -26,7 +25,6 @@ class VecL2SqSpec extends SparkSpec {
   }
 
   test("vec_l2sq edge cases: empty, zero, identical, sign") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = spark.sql("""
       SELECT vec_l2sq(CAST(array() AS ARRAY<DOUBLE>),
                       CAST(array() AS ARRAY<DOUBLE>)) AS empty,
