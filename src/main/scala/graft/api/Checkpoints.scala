@@ -1,9 +1,11 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
-/** Reliable-checkpoint directory resolution for the iterative operators
-  * (label propagation, k-means rounds, PCA deflation).
+/** Reliable checkpoints for the iterative operators (label propagation,
+  * graph loops, k-means rounds, PCA deflation): directory resolution, and
+  * [[materialize]], a checkpoint that also reports a count.
   *
   * Reliable checkpoints only deliver their executor-loss guarantee if the
   * directory is visible to every executor. Resolution order therefore
@@ -28,5 +30,17 @@ object Checkpoints {
         .getOrElse(java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
       sc.setCheckpointDir(dir)
     }
+  }
+
+  /** Eager reliable checkpoint of `df` plus one number about it, from the
+    * SAME job: `measure` (an aggregate over `df`'s columns, default the row
+    * count) rides the write as an unnamed [[Observation]], so no second
+    * action re-reads the checkpoint to size a loop or test convergence,
+    * and concurrent callers never share a metric name. */
+  def materialize(df: DataFrame, measure: Column = count(lit(1))): (DataFrame, Long) = {
+    ensureDir(df.sparkSession)
+    val observed = new Observation()
+    val out = df.observe(observed, measure.as("m")).checkpoint(eager = true)
+    (out, observed.get("m").asInstanceOf[Long])
   }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.api.{QueryModule, QuerySpec}
+import graft.api.{Checkpoints, QueryModule, QuerySpec, StreamWidth}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -741,100 +741,60 @@ object Dedup extends QueryModule {
     * fixpoint). This is the step that turns pairwise matches into a
     * keep-one-per-cluster decision. Iterations are O(component diameter) —
     * near-dup clusters are shallow — and each is one join + partial-agg
-    * shuffle.
+    * shuffle. Returns (id, label = min id in its component) for every pair
+    * endpoint: the fixpoint the cluster/keep decisions read.
     *
-    * Fault tolerance at cluster scale: lineage grows by one join per
-    * iteration, so it is truncated with RELIABLE checkpoints (written to
-    * `sparkContext`'s checkpoint dir — HDFS/object storage on a real
-    * cluster), not `localCheckpoint`, which stores blocks only on executors
-    * and makes any executor loss fatal mid-computation. Intermediate
-    * iterations persist to memory-and-disk and checkpoint every
-    * [[clustersCheckpointEvery]] rounds; a lost executor then recomputes at
-    * most that many iterations from the last durable cut. */
-  val clustersCheckpointEvery = 3
-
-  /** Per-node component labels (id, label = min id in the component) —
-    * the fixpoint the cluster/keep decisions read. */
+    * One Spark action per round: each round is one
+    * [[Checkpoints.materialize]], whose write job also observes how many
+    * labels changed, and that count is the convergence test. The
+    * edge set is materialized the same way, its row count sizing the loop
+    * width; with no edges the loop runs no round at all.
+    *
+    * Fault tolerance at cluster scale: every round is a RELIABLE checkpoint
+    * (written to `sparkContext`'s checkpoint dir — HDFS/object storage on a
+    * real cluster), not `localCheckpoint`, which stores blocks only on
+    * executors and makes any executor loss fatal mid-computation. Lineage
+    * is therefore one round deep: a lost executor recomputes at most the
+    * current round from the previous durable cut, and nothing is persisted,
+    * so nothing is left cached after the call. */
   def labels(pairs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    graft.api.Checkpoints.ensureDir(pairs.sparkSession)
-    // Materialize the edge set once, durably — it is consumed by every
-    // iteration, and its lineage (the whole LSH candidate pipeline) must
-    // not re-run per round nor be lost with an executor. No distinct():
-    // the input pairs are distinct with doc_a < doc_b, so the union with
-    // their reversals cannot collide. The reversal is an explode of a
-    // two-element array — ONE reference to `pairs`, not a unionAll of two
-    // selects, which duplicates the entire LSH candidate+verify subtree
-    // in the plan (exchange reuse dedups only the exchanges; the verify
-    // join and distinct re-ran once per union leg — measured as a second
-    // multi-MB pass inside the checkpoint stage).
-    val edges = pairs
+    val s = pairs.sparkSession
+    // The edge set is consumed by every round, and its lineage (the whole
+    // LSH candidate pipeline) must not re-run per round nor be lost with
+    // an executor. No distinct(): the input pairs are distinct with
+    // doc_a < doc_b, so the union with their reversals cannot collide.
+    // The reversal is an explode of a two-element array — ONE reference to
+    // `pairs`, not a unionAll of two selects, which duplicates the entire
+    // LSH candidate+verify subtree in the plan (exchange reuse dedups only
+    // the exchanges; the verify join and distinct re-ran once per union
+    // leg — measured as a second multi-MB pass inside the checkpoint stage).
+    val (edges, nEdges) = Checkpoints.materialize(pairs
       .select(explode(array(
         struct(col("doc_a"), col("doc_b")),
         struct(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))).as("e"))
-      .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b"))
-      .checkpoint(eager = true)
+      .select(col("e.doc_a").as("doc_a"), col("e.doc_b").as("doc_b")))
     // Scale-adaptive loop width (guide §2.2): the label table is one row
-    // per pair ENDPOINT — a tiny fraction of the corpus (only near-dup
-    // members appear) — yet every iteration's join/agg/persist inherited
-    // the session's full shuffle width (round-15 StageProfile: ~15 stages
-    // of 12–32 tasks moving ≤0.2 MB each). The edge set is already
-    // materialized, so its exact count is one cheap action; width follows
-    // rows (one partition per 500k edge rows), capped at the session
-    // width so a billion-edge pair set still fans out fully.
-    val loopWidth =
-      graft.api.StreamWidth.forRows(pairs.sparkSession, edges.count())
-    // Initial labels only persist (not checkpoint): they are one cheap
-    // distinct away from the durable edge set, so executor loss recomputes
-    // them from the checkpoint rather than re-running the LSH pipeline.
-    // Every persist is tracked in `cached` and released at the next
-    // checkpoint boundary; the fixpoint is cut to a final reliable
-    // checkpoint below so ALL persists release before returning.
-    graft.api.StreamWidth.withShufflePartitions(pairs.sparkSession, loopWidth) {
-    val init = edges.select(col("doc_a").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels: DataFrame = init
-    var changed = 1L
-    var iter = 0
-    var cached: List[DataFrame] = List(init)
-    while (changed > 0) {
-      iter += 1
-      val neigh = edges
-        .join(labels.select(col("id").as("doc_b"), col("label").as("nl")), "doc_b")
-        .groupBy(col("doc_a").as("id")).agg(min(col("nl")).as("mn"))
-      val joined = labels.join(neigh, Seq("id"), "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("mn"), col("label"))).as("nl"))
-      val updated =
-        if (iter % clustersCheckpointEvery == 0) joined.checkpoint(eager = true)
-        else {
-          val p = joined.persist(StorageLevel.MEMORY_AND_DISK)
-          cached ::= p
-          p
-        }
-      // Convergence is tested every 2nd round: the test is a driver count
-      // action over the label table, and min-label propagation is monotone
-      // — one redundant round at the fixpoint changes nothing — so
-      // skipping alternate checks halves the driver round-trips at the
-      // price of at most one extra (cheap, already-converged) join.
-      changed =
-        if (iter % 2 == 0) updated.filter(col("nl") =!= col("label")).count()
-        else 1L
-      labels = updated.select(col("id"), col("nl").as("label"))
-      if (iter % clustersCheckpointEvery == 0) {
-        cached.foreach(_.unpersist(blocking = false))
-        cached = Nil
+    // per pair ENDPOINT — a tiny fraction of the corpus — so the rounds
+    // run at a width that follows the edge count (one partition per 500k
+    // edge rows), capped at the session width so a billion-edge pair set
+    // still fans out fully.
+    StreamWidth.withShufflePartitions(s, StreamWidth.forRows(s, nEdges)) {
+      var labels = edges.select(col("doc_a").as("id")).distinct()
+        .withColumn("label", col("id"))
+      var changed = nEdges
+      while (changed > 0) {
+        val neigh = edges
+          .join(labels.select(col("id").as("doc_b"), col("label").as("nl")), "doc_b")
+          .groupBy(col("doc_a").as("id")).agg(min(col("nl")).as("mn"))
+        val (round, n) = Checkpoints.materialize(
+          labels.join(neigh, Seq("id"), "left")
+            .select(col("id"), col("label"),
+              least(col("label"), coalesce(col("mn"), col("label"))).as("nl")),
+          count_if(col("nl") =!= col("label")))
+        labels = round.select(col("id"), col("nl").as("label"))
+        changed = n
       }
-    }
-    // Cut the fixpoint to its own reliable checkpoint so every persist made
-    // above can be released NOW — without this, each labels()/clusters()/
-    // keepSet() call would leak one MEMORY_AND_DISK plan for the session's
-    // lifetime (the label table is tiny: one row per endpoint of the pair
-    // set, so the extra write is cheap).
-    val out = labels.checkpoint(eager = true)
-    cached.foreach(_.unpersist(blocking = false))
-    out
+      labels
     }
   }
 

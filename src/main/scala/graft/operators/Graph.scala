@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.api.{Exact, QueryModule, QuerySpec}
+import graft.api.{Checkpoints, Exact, QueryModule, QuerySpec, StreamWidth}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.DecimalType
   * rounds — each round is ONE shuffle on the destination key, and the rank
   * state is O(|nodes|), never materializing paths. This is exactly the
   * distributed shape that scales: at 10⁹ nodes the same loop runs with the
-  * ranks DataFrame persisted + reliably checkpointed every few rounds (see
-  * [[graft.llm.Dedup.clusters]] for that machinery); at 25 nodes Catalyst
+  * ranks DataFrame reliably checkpointed round by round (see
+  * [[graft.llm.Dedup.labels]] for that machinery); at 25 nodes Catalyst
   * simply broadcasts the rank side of every round.
   *
   * Numeric discipline: per-round contributions are summed in exact DECIMAL
@@ -36,11 +36,13 @@ object Graph extends QueryModule {
   /** Iterative frames reference the previous round's frame TWICE (once to
     * carry state, once to relax/propagate), so the logical plan is a DAG
     * Catalyst traverses as a TREE — analysis cost doubles per round and a
-    * ~20-round loop hangs in the planner long before any data moves. Same
-    * cure as [[graft.llm.Dedup]]'s label loop: truncate lineage with an
-    * eager checkpoint every few rounds (cluster-visible dir via
-    * [[graft.api.Checkpoints]]). Integer/decimal-exact rounds mean the
-    * checkpoint changes nothing observable. */
+    * ~20-round loop hangs in the planner long before any data moves. Cure:
+    * truncate lineage with an eager reliable checkpoint every few rounds
+    * (cluster-visible dir via [[Checkpoints]]). These loops run a fixed
+    * round count, so nothing needs a per-round cut; [[graft.llm.Dedup.labels]]
+    * cuts every round because each cut also observes its convergence count.
+    * Integer/decimal-exact rounds mean the checkpoint changes nothing
+    * observable. */
   private val truncateEvery = 4
   private def maybeCheckpoint(df: DataFrame, round: Int, rounds: Int): DataFrame =
     if (round % truncateEvery == 0 && round < rounds) checkpointed(df) else df
@@ -53,7 +55,7 @@ object Graph extends QueryModule {
     * the components query at sf0.1. O(|edges|) storage, exactly what a
     * cluster run would persist across rounds anyway. */
   private def checkpointed(df: DataFrame): DataFrame = {
-    graft.api.Checkpoints.ensureDir(df.sparkSession)
+    Checkpoints.ensureDir(df.sparkSession)
     df.checkpoint(eager = true)
   }
 
@@ -63,16 +65,15 @@ object Graph extends QueryModule {
     * min-aggregate on node); state stays O(|nodes|). Integer costs make
     * every round bit-exact on any partitioning. */
   def ssspRounds(dist0: DataFrame, edges0: DataFrame, rounds: Int): DataFrame = {
-    val edges = checkpointed(edges0)
+    val (edges, nEdges) = Checkpoints.materialize(edges0)
     // Loop width follows the materialized edge count (guide §2.2): the
     // relaxation frames are O(|nodes|) and the per-round join moves
     // O(|edges|) — full session width on a 625-row trade graph only buys
     // per-stage scheduling and codegen overhead (round-15 StageProfile:
     // ~14 × 140 ms two-task stages). Billion-edge graphs still get the
     // deployment's configured width.
-    graft.api.StreamWidth.withShufflePartitions(
-      edges.sparkSession, graft.api.StreamWidth.forRows(
-        edges.sparkSession, edges.count())) {
+    StreamWidth.withShufflePartitions(
+      edges.sparkSession, StreamWidth.forRows(edges.sparkSession, nEdges)) {
       var dist = dist0
       for (r <- 1 to rounds) {
         val relaxed = edges
@@ -130,12 +131,11 @@ object Graph extends QueryModule {
   def triangleCounts(nodes: DataFrame, und0: DataFrame): DataFrame = {
     // und feeds the degree agg AND both sides of the wedge closure;
     // oriented is referenced three times — materialize each once.
-    val und = checkpointed(und0)
+    val (und, nUnd) = Checkpoints.materialize(und0)
     // Same loop-width discipline as [[ssspRounds]] (wedge work is
     // O(sum out-deg²) of a materialized edge set).
-    graft.api.StreamWidth.withShufflePartitions(
-      und.sparkSession, graft.api.StreamWidth.forRows(
-        und.sparkSession, und.count())) {
+    StreamWidth.withShufflePartitions(
+      und.sparkSession, StreamWidth.forRows(und.sparkSession, nUnd)) {
       val deg = und.select(col("a").as("node")).union(und.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val withDeg = und
@@ -169,11 +169,10 @@ object Graph extends QueryModule {
     * per round, O(|nodes|) state, exactly the machinery behind
     * [[graft.llm.Dedup]]'s duplicate clusters, exposed as a graph op. */
   def componentRounds(nodes: DataFrame, und0: DataFrame, rounds: Int): DataFrame = {
-    val und = checkpointed(und0)
+    val (und, nUnd) = Checkpoints.materialize(und0)
     // Same loop-width discipline as [[ssspRounds]].
-    graft.api.StreamWidth.withShufflePartitions(
-      und.sparkSession, graft.api.StreamWidth.forRows(
-        und.sparkSession, und.count())) {
+    StreamWidth.withShufflePartitions(
+      und.sparkSession, StreamWidth.forRows(und.sparkSession, nUnd)) {
       val edges = und.select(col("a").as("src"), col("b").as("dst"))
         .union(und.select(col("b").as("src"), col("a").as("dst")))
       var lab = nodes.select(col("node"), col("node").as("label"))
@@ -287,10 +286,9 @@ object Graph extends QueryModule {
     "rel_graph_kcore" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
-        val und = checkpointed(strongEdges(s, dir))
+        val (und, nUnd) = Checkpoints.materialize(strongEdges(s, dir))
         // Same loop-width discipline as [[ssspRounds]].
-        graft.api.StreamWidth.withShufflePartitions(
-          s, graft.api.StreamWidth.forRows(s, und.count())) {
+        StreamWidth.withShufflePartitions(s, StreamWidth.forRows(s, nUnd)) {
           val edges = und.select($"a".as("src"), $"b".as("dst"))
             .union(und.select($"b".as("src"), $"a".as("dst")))
           var live = edges.select($"src".as("node")).distinct()
@@ -436,7 +434,7 @@ object Graph extends QueryModule {
     // from the endpoint keys, so both engines agree bit-for-bit with no
     // float discipline needed). One shuffle per round, O(|nodes|) state —
     // the same iterate-a-join shape as pagerank, so the 100 TB story is
-    // identical (persist + reliable checkpoint every few rounds). 8 rounds
+    // identical (a reliable checkpoint every few rounds). 8 rounds
     // far exceeds the 25-node graph's diameter; the oracle unrolls the
     // SAME 8 relaxations as CTEs, so the results match even before
     // convergence arguments enter.
@@ -488,9 +486,10 @@ object Graph extends QueryModule {
     // clusters in the dedup pipeline, run here on a graph whose threshold
     // filter genuinely fragments it. 8 rounds unrolled identically in the
     // oracle, so results agree even before the convergence argument; at
-    // 100 TB the loop gets persist + reliable checkpoints every few rounds
-    // (Dedup.labels machinery) and large-star/small-star contraction if
-    // diameters blow up. Component id = lexicographic min node name.
+    // 100 TB the loop would get a reliable checkpoint per round, each also
+    // carrying its convergence count (Dedup.labels machinery), and
+    // large-star/small-star contraction if measured diameters blow up.
+    // Component id = lexicographic min node name.
     "rel_graph_components" -> QuerySpec(
       fn = (s, dir) =>
         componentRounds(nationNodes(s, dir), strongEdges(s, dir), rounds = 8)

@@ -51,7 +51,9 @@ object Tables {
     * paths — the metastore discipline the reference's Delta tables get
     * from Unity/Hive. Reads plan identically to the path reads: same
     * parquet relation, same pushdown/pruning (CatalogSpec asserts
-    * PushedFilters through the catalog).
+    * PushedFilters through the catalog). Each table is registered with
+    * its footer schema ([[Parquet.open]]), so registration runs no Spark
+    * job.
     *
     * `events` needs the encoding-adaptive ts normalization (an expression,
     * not storable parquet metadata), so the raw table registers as
@@ -63,17 +65,19 @@ object Tables {
     all.foreach { n =>
       val table = if (n == "events") s"$db.events_raw" else s"$db.$n"
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      spark.catalog.createTable(table, "parquet",
-        Map("path" -> s"$dir/$n.parquet"))
+      val path = s"$dir/$n.parquet"
+      spark.catalog.createTable(table, "parquet", Parquet.open(spark, path).schema,
+        Map("path" -> path))
       ()
     }
-    val tsExpr = Parquet.open(spark, s"$dir/events.parquet").schema("ts").dataType match {
+    val raw = spark.table(s"$db.events_raw")
+    val tsExpr = raw.schema("ts").dataType match {
       case LongType         => "timestamp_micros(ts div 1000)"
       case TimestampNTZType => "CAST(ts AS TIMESTAMP)"
       case _                => "ts"
     }
     spark.sql(s"DROP VIEW IF EXISTS $db.events")
-    val cols = spark.table(s"$db.events_raw").columns
+    val cols = raw.columns
       .map(c => if (c == "ts") s"$tsExpr AS ts" else s"`$c`")
       .mkString(", ")
     spark.sql(s"CREATE VIEW $db.events AS SELECT $cols FROM $db.events_raw")

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Catalog-backed registration ([[Tables.registerAllPersistent]]):
   * external-table metadata in `spark.catalog`, path data untouched,
-  * pushdown preserved, visible across session forks. */
-class CatalogSpec extends SparkSpec {
+  * pushdown preserved, visible across session forks, and registered from
+  * footer schemas without a Spark job. */
+class CatalogSpec extends SparkSpec with JobLog {
 
   test("registerAllPersistent: external tables + events view, pushdown intact") {
     Tables.registerAllPersistent(spark, sfDir)
@@ -49,5 +50,9 @@ class CatalogSpec extends SparkSpec {
     Tables.registerAllPersistent(spark, sfDir)
     val again = dbTables().map(_.name)
     assert(again.length === again.distinct.length)
+  }
+
+  test("registerAllPersistent runs no Spark job") {
+    assert(jobsOf(Tables.registerAllPersistent(spark, sfDir)).isEmpty)
   }
 }

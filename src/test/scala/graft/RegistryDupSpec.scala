@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * SparkEntry only catches duplicates BETWEEN modules). This spec scans
   * the source tree for `"name" -> QuerySpec` declarations and asserts
   * every declared name is unique across the whole tree, and that the
-  * runtime registry carries exactly the declared set. */
+  * runtime registry carries exactly the declared set. The same source
+  * scan guards the one-install rule and the action-free loop widths. */
 class RegistryDupSpec extends AnyFunSuite {
 
   private def scalaSources(dir: java.io.File): Seq[java.io.File] =
@@ -44,5 +45,29 @@ class RegistryDupSpec extends AnyFunSuite {
     val main = scalaSources(new java.io.File("src/main/scala"))
     assert(mentioning("Graft.install(", main).forall(_ == "Graft.scala"))
     assert(mentioning("extraStrategies", main) === Seq("Graft.scala"))
+  }
+
+  test("no StreamWidth.forRows call sizes its width with a count() action") {
+    // A loop width comes from a count its materialization already observed
+    // (Checkpoints.materialize), never from a second action over the frame.
+    val call = "StreamWidth.forRows("
+    val args = scalaSources(new java.io.File("src/main/scala")).flatMap { f =>
+      val text = java.nio.file.Files.readString(f.toPath)
+      Iterator.iterate(text.indexOf(call))(i => text.indexOf(call, i + 1))
+        .takeWhile(_ >= 0).map { i =>
+          val open = i + call.length
+          val close = Iterator.iterate((open, 1)) { case (j, depth) =>
+            (j + 1, text(j) match {
+              case '(' => depth + 1
+              case ')' => depth - 1
+              case _ => depth
+            })
+          }.dropWhile(_._2 > 0).next()._1
+          (f.getName, text.substring(open, close - 1))
+        }.toSeq
+    }
+    assert(args.size >= 5, s"expected the loop-width call sites, found $args")
+    val counted = args.filter(_._2.contains(".count()"))
+    assert(counted.isEmpty, s"width sized by a count() action: $counted")
   }
 }

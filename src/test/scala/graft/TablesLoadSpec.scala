@@ -1,11 +1,8 @@
 package graft
 
 import graft.sources.{Parquet, Tables}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
-
-import scala.jdk.CollectionConverters._
 
 /** Tables.load must normalize every events.ts fixture encoding seen across
   * fixture generations to the same session-TZ (UTC) micros TimestampType:
@@ -17,7 +14,7 @@ import scala.jdk.CollectionConverters._
   * It also pins [[Parquet.open]], the job-free open every load goes
   * through, against the reference spelling `spark.read.parquet(path)`.
   */
-class TablesLoadSpec extends SparkSpec {
+class TablesLoadSpec extends SparkSpec with JobLog {
   private val ss = SparkSpec.spark
   import ss.implicits._
 
@@ -105,34 +102,9 @@ class TablesLoadSpec extends SparkSpec {
   }
 
   test("Tables.load of every table runs no Spark job") {
-    val group = "tables-load-jobs"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          started.add(e.properties.getProperty("spark.job.description"))
-    }
-    val sc = spark.sparkContext
-    // Jobs started under `group` while `run` opens tables; a marker job
-    // flushes the asynchronous listener bus.
-    def jobsOf(run: => Unit): Seq[String] = {
-      started.clear()
-      sc.setJobGroup(group, "open")
-      try {
-        run
-        sc.setJobDescription("marker")
-        sc.parallelize(Seq(1), 1).count()
-      } finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
-      started.asScala.toSeq.filter(_ != "marker")
-    }
-    sc.addSparkListener(listener)
-    try {
-      assert(jobsOf(Tables.all.foreach(n => Tables.load(spark, sf001, n))).isEmpty)
-      // The listener does see the reference spelling's inference job.
-      assert(jobsOf(spark.read.parquet(s"$sf001/region.parquet")).nonEmpty)
-    } finally sc.removeSparkListener(listener)
+    assert(jobsOf(Tables.all.foreach(n => Tables.load(spark, sf001, n))).isEmpty)
+    // The listener does see the reference spelling's inference job.
+    assert(jobsOf(spark.read.parquet(s"$sf001/region.parquet")).nonEmpty)
   }
 
   test("Parquet.open rejects a streaming sink output and an empty directory") {
