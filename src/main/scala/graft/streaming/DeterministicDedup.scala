@@ -8,9 +8,10 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 /** Streaming dedup with a DETERMINISTIC survivor — the repaired form of
   * `dropDuplicatesWithinWatermark("log_id")`.
   *
-  * Why it exists: executor-loss fault injection (tools/FaultInjectStream)
-  * caught `dropDuplicatesWithinWatermark` emitting DIFFERENT silver content
-  * across two drains of the same input. Its contract keeps the first row
+  * Why it exists: executor-loss fault injection (the `medallion` scenario
+  * of tools/FaultInject) caught `dropDuplicatesWithinWatermark` emitting
+  * DIFFERENT silver content across two drains of the same input. Its
+  * contract keeps the first row
   * PROCESSED per key, and when two rows with the same key land in the same
   * micro-batch, "first" is decided by shuffle-arrival order — a race
   * against task scheduling (and, under retries, against which attempt's

@@ -2,10 +2,8 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
-import java.security.MessageDigest
 import java.util.concurrent.atomic.AtomicLong
 
 /** Spill-under-memory-pressure probe: the "degrades to disk, not to OOM"
@@ -23,8 +21,8 @@ import java.util.concurrent.atomic.AtomicLong
   *      memoryBytesSpilled/diskBytesSpilled (otherwise the probe reports
   *      NO_SPILL so a vacuous pass cannot masquerade as evidence);
   *   3. the result is BIT-IDENTICAL to the roomy-memory run of the same
-  *      query (order-independent SHA-256 over canonicalized rows) — the
-  *      spill path changes operator internals, never semantics.
+  *      query ([[FaultInject.digest]], order-independent) — the spill path
+  *      changes operator internals, never semantics.
   *
   * The harness runs this twice (tight and roomy executor memory) and
   * diffs the hashes; each invocation emits one JSON line per query plus a
@@ -35,29 +33,13 @@ import java.util.concurrent.atomic.AtomicLong
   *     --conf spark.executor.memory=1200m \
   *     --class graft.tools.SpillProbe <jar> <sfDir> <query> [query ...]
   *
-  * Like FaultInject, intentionally NOT a ScalaTest: local-cluster needs a
-  * packaged jar on the executor classpath.
+  * Like the query scenarios of [[FaultInject]] (`ts_drawdown`,
+  * `llm_dedup_minhash`), intentionally NOT a ScalaTest: local-cluster needs
+  * a packaged jar on the executor classpath.
   */
 object SpillProbe {
   private val memSpilled = new AtomicLong(0L)
   private val diskSpilled = new AtomicLong(0L)
-
-  private def resultHash(spark: SparkSession, name: String, sfDir: String): (String, Long) = {
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    val cols = df.columns.sorted
-    // Cells are canonicalized to their SQL string form BEFORE collecting:
-    // a JVM Array cell's String.valueOf is an identity hash, which would
-    // make the digest nondeterministic and mask (or fake) the
-    // tight-vs-roomy divergence this probe exists to detect. Rows join
-    // under the \u0001 unit separator so ("ab","c") and ("a","bc") stay
-    // distinct.
-    val rows = df.select(cols.map(c =>
-      org.apache.spark.sql.functions.col(c).cast("string")): _*).collect()
-    val lines = rows.map(_.toSeq.map(v => String.valueOf(v)).mkString("")).sorted
-    val d = MessageDigest.getInstance("SHA-256")
-    lines.foreach(l => d.update((l + "\n").getBytes("UTF-8")))
-    (d.digest().map("%02x".format(_)).mkString, rows.length.toLong)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -82,7 +64,7 @@ object SpillProbe {
       val (mem0, disk0) = (memSpilled.get, diskSpilled.get)
       val t0 = System.nanoTime()
       val attempt =
-        try Right(resultHash(spark, name, sfDir))
+        try Right(FaultInject.digest(SparkEntry.queries(name)(spark, sfDir)))
         catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
       val sec = (System.nanoTime() - t0) / 1e9
       // Listener events trail task completion; wait until the counters are
@@ -98,7 +80,7 @@ object SpillProbe {
       }
       val (mem, disk) = (memSpilled.get - mem0, diskSpilled.get - disk0)
       val line = attempt match {
-        case Right((hash, rows)) =>
+        case Right(FaultInject.Digest(hash, rows)) =>
           f"""{"query":"$name","ok":true,"rows":$rows,"hash":"$hash","sec":$sec%.2f,""" +
             s""""memory_spilled_bytes":$mem,"disk_spilled_bytes":$disk,""" +
             s""""spilled":${disk > 0 || mem > 0}}"""

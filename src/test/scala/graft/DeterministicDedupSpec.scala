@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * `dropDuplicatesWithinWatermark` keeps an arbitrary first-arrival row per
   * key, so when the generator's birthday-colliding log_ids carry different
   * payloads, two drains of the SAME input could emit different silver
-  * content (caught live by tools/FaultInjectStream under executor kill).
+  * content (caught live under executor kill by the `medallion` scenario of
+  * tools/FaultInject).
   * DeterministicDedup pins the survivor to the batch analog's keep rule.
   */
 class DeterministicDedupSpec extends SparkSpec {

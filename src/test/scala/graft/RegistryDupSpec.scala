@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the source tree for `"name" -> QuerySpec` declarations and asserts
   * every declared name is unique across the whole tree, and that the
   * runtime registry carries exactly the declared set. The same source
-  * scan guards the one-install rule and the action-free loop widths. */
+  * scan guards the one-install rule, the action-free loop widths and the
+  * one fault harness. */
 class RegistryDupSpec extends AnyFunSuite {
 
   private def scalaSources(dir: java.io.File): Seq[java.io.File] =
@@ -69,5 +70,16 @@ class RegistryDupSpec extends AnyFunSuite {
     assert(args.size >= 5, s"expected the loop-width call sites, found $args")
     val counted = args.filter(_._2.contains(".count()"))
     assert(counted.isEmpty, s"width sized by a count() action: $counted")
+  }
+
+  test("executor kills and FAULTS outputs live only in the fault harness") {
+    def containing(dir: String, pattern: scala.util.matching.Regex): Seq[String] =
+      scalaSources(new java.io.File(dir))
+        .filter(f => pattern.findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined)
+        .map(_.getName)
+    // Both spellings of the signal: prose and a process argument list.
+    assert(containing("src/main/scala", """kill"?,?\s*"?-9|pgrep|SparkListenerExecutorRemoved""".r) ===
+      Seq("FaultInject.scala"))
+    assert(containing("src/main/scala/graft/tools", "FAULTS".r) === Seq("FaultInject.scala"))
   }
 }
