@@ -32,18 +32,12 @@ import java.nio.file.{Files, Paths}
   * printed to stdout AND (because stdout is interleaved with sbt/log4j
   * noise) written to the file named by SPARK_GRAFT_BENCH_OUT when set.
   *
-  * Regression triage (round 6): the min-of-two-orders statistic can still
-  * be fooled by an outlier landing in BOTH orders (round 5's
-  * rel_window_running_sum: 2.64/3.20 s in-suite, 0.71 s solo). So after the
-  * two passes, any query whose min is ≥2× its PREVIOUS round's time (read
-  * from SPARK_GRAFT_BENCH_PREV, default BENCH_PREV.json — a flat
-  * {name: seconds} map the repo commits each round) gets an automatic
-  * third, quiesced re-run: caches cleared, a full GC, then the query alone.
-  * Those times land under "solo" — a real regression is slow there too; a
-  * neighborhood artifact collapses back to baseline. Per-query GC time
-  * (collector MXBean deltas, "gc1"/"gc2") is recorded for both passes so
-  * ordering swings can be attributed to collection pressure rather than
-  * guessed at.
+  * Each run is one [[Graft.record]]: its `wall_ms` is the timing, and
+  * the whole record (build, Catalyst phases, jobs, stages, tasks, bytes,
+  * spill, rows out) lands in the on-disk JSON under "records", one per
+  * pass. The untimed warm-up run is recorded too, under "warmup", so a
+  * cold build (text or image features, BPE) stays visible. Targeted runs
+  * (`Bench <query...>`) are how one query's layers are attributed.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -52,24 +46,6 @@ object Bench {
     val spark: SparkSession =
       GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Per-query shuffle/aggregation spill attribution (the SpillProbe
-    // counters, in-suite): a scale point whose wall clock moves with
-    // partition count but whose plan is unchanged is memory-bound, not
-    // plan-bound — the spill column is how the two are told apart.
-    val memSpill = new java.util.concurrent.atomic.AtomicLong(0L)
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-          ()
-        }
-      }
-    })
-    val spillMb = new java.util.concurrent.ConcurrentHashMap[String, Double]()
     val names =
       if (args.nonEmpty) args.toSeq // targeted profiling
       else if (sys.env.get("SPARK_GRAFT_BENCH_HEADLINE").contains("1"))
@@ -77,11 +53,8 @@ object Bench {
       else SparkEntry.queries.keys.toSeq.sorted
     // Execute the FULL plan: count() would let Catalyst prune the very
     // aggregates/projections being measured (and collapse pure projections
-    // to a parquet metadata count). The noop sink runs everything and
-    // discards the rows.
-    def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    // to a parquet metadata count). Graft.record runs it to the noop sink.
+    def run(name: String): api.QueryRecord = Graft.record(spark, sfDir, name)
 
     // Post-query hygiene: report (and clear) anything the query left
     // behind that would interfere with subsequent measurements.
@@ -106,11 +79,11 @@ object Bench {
 
     // Untimed warm-up against the measured dataset so JIT/codegen and file
     // listing don't land in the first query's measurement.
-    names.headOption.foreach { n =>
-      try { run(n); checkClean(n) }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up $n failed: ${e.getMessage}")
-      }
+    val warmup = names.headOption.map { n =>
+      val r = run(n)
+      checkClean(n)
+      r.error.foreach(e => System.err.println(s"[bench] warm-up $n failed: $e"))
+      r
     }
     // Contention probe: the same fixed CPU-bound job timed at run start,
     // between the two passes, and at run end. The work is constant, so any
@@ -140,45 +113,22 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // Total JVM GC time so far, seconds — per-query deltas attribute slow
-    // outliers to collection pressure (or rule it out).
-    def gcSeconds(): Double = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum / 1e3
-    }
     val twoPass = args.isEmpty
-    def timedPass(order: Seq[String]): Map[String, (Double, Option[String], Double)] =
+    def timedPass(order: Seq[String]): Map[String, api.QueryRecord] =
       order.map { name =>
         // Targeted profiling measures each query against a settled heap:
         // a heavy neighbor's collection debt otherwise lands in the next
         // query's wall clock (measured 3.8 → 25 s on llm_knn_ivf after
         // llm_dedup_minhash at sf10). Full two-pass runs keep the
-        // historical in-suite measurement — min-of-two-orderings plus the
-        // solo-rerun triage already absorb neighborhood effects there, and
-        // a per-query full GC would break comparability with BENCH_PREV.
+        // historical in-suite measurement — min-of-two-orderings already
+        // absorbs neighborhood effects there.
         if (!twoPass) System.gc()
-        val g0 = gcSeconds()
-        val s0 = memSpill.get + diskSpill.get
-        val t0 = System.nanoTime()
-        try {
-          run(name)
-          val t = (System.nanoTime() - t0) / 1e9
-          val g = gcSeconds() - g0
-          checkClean(name)
-          // Listener delivery is async; checkClean's own actions give the
-          // bus slack — attribution is approximate but MB-scale faithful.
-          val s = (memSpill.get + diskSpill.get - s0) / 1e6
-          spillMb.merge(name, s, (a, b) => math.max(a, b))
-          name -> (t, None: Option[String], g)
-        } catch {
-          case e: Throwable =>
-            checkClean(name)
-            name -> (-1.0,
-              Some(Option(e.getMessage).getOrElse(e.getClass.getName)),
-              gcSeconds() - g0)
-        }
+        val r = run(name)
+        checkClean(name)
+        name -> r
       }.toMap
+    def seconds(r: api.QueryRecord): Double =
+      if (r.error.isDefined) -1.0 else r("wall_ms") / 1e3
 
     // Pass 1 in the given (sorted) order; pass 2, full runs only, in a
     // seeded-shuffled order so each query sees different neighbors. Probes
@@ -201,7 +151,7 @@ object Bench {
     } else -1.0
     val pass1 = timedPass(names)
     val probeMid = if (twoPass) probeMin3() else -1.0
-    val pass2: Map[String, (Double, Option[String], Double)] =
+    val pass2: Map[String, api.QueryRecord] =
       if (!twoPass) Map.empty
       else {
         val seed = sys.env.getOrElse("SPARK_GRAFT_BENCH_SEED", "42").toLong
@@ -215,63 +165,21 @@ object Bench {
     // values are emitted so start-contended runs remain human-visible.
     val contended = twoPass && math.max(probeMid, probeEnd) >= 1.5 * probeStart
 
+    def runsOf(name: String): Seq[api.QueryRecord] = pass1.get(name).toSeq ++ pass2.get(name)
+    // A query must succeed in BOTH passes to count as ok.
     val results: Seq[(String, Double, Option[String])] = names.map { name =>
-      val (t1, e1, _) = pass1(name)
-      pass2.get(name) match {
-        case Some((t2, e2, _)) =>
-          // A query must succeed in BOTH passes to count as ok.
-          val err = e1.orElse(e2)
-          val t = if (err.isDefined) -1.0 else math.min(t1, t2)
-          (name, t, err)
-        case None => (name, t1, e1)
-      }
+      val runs = runsOf(name)
+      val err = runs.flatMap(_.error).headOption
+      (name, if (err.isDefined) -1.0 else runs.map(seconds).min, err)
     }
     val unstable = if (!twoPass) Seq.empty[(String, Double, Double)]
       else names.flatMap { name =>
-        val t1 = pass1(name)._1
-        val t2 = pass2(name)._1
+        val t1 = seconds(pass1(name))
+        val t2 = seconds(pass2(name))
         if (t1 > 0 && t2 > 0 && math.max(t1, t2) > 1.3 * math.min(t1, t2))
           Some((name, t1, t2))
         else None
       }
-
-    // Regression triage: previous round's per-query minima (committed as
-    // BENCH_PREV.json). Any ok query at ≥2× its previous time (and ≥0.3 s
-    // absolute growth — sub-tenth-second queries double on scheduler noise
-    // alone) gets a third, quiesced run: neighbors done, caches cleared,
-    // full GC first. A real regression stays slow; suite interference
-    // collapses to baseline.
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCH_PREV.json")
-    val prev: Map[String, Double] =
-      try {
-        val f = Paths.get(prevPath)
-        if (!Files.exists(f)) Map.empty
-        else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val node = om.readTree(Files.readString(f))
-          import scala.jdk.CollectionConverters._
-          node.properties().asScala
-            .filter(_.getValue.isNumber)
-            .map(e => e.getKey -> e.getValue.asDouble()).toMap
-        }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] could not read $prevPath: ${e.getMessage}")
-          Map.empty
-      }
-    val solo: Map[String, Double] =
-      if (!twoPass) Map.empty
-      else results.collect {
-        case (name, t, None)
-            if prev.get(name).exists(p => p > 0 && t >= 2 * p && t - p >= 0.3) =>
-          spark.sharedState.cacheManager.clearCache()
-          System.gc()
-          val t0 = System.nanoTime()
-          val s = try { run(name); (System.nanoTime() - t0) / 1e9 }
-            catch { case _: Throwable => -1.0 }
-          checkClean(name)
-          name -> s
-      }.toMap
 
     def esc(s: String): String =
       s.flatMap {
@@ -295,17 +203,16 @@ object Bench {
     val extra =
       if (!twoPass) ""
       else {
-        val p1 = obj(names.map(n => n -> pass1(n)._1.toString))
-        val p2 = obj(names.map(n => n -> pass2(n)._1.toString))
+        val p1 = obj(names.map(n => n -> seconds(pass1(n)).toString))
+        val p2 = obj(names.map(n => n -> seconds(pass2(n)).toString))
         val un = obj(unstable.map { case (n, t1, t2) =>
           n -> s"[$t1,$t2]" })
         val lk = obj(leaks.map { case (k, v) => k -> ("\"" + esc(v) + "\"") })
-        val g1 = obj(names.map(n => n -> f"${pass1(n)._3}%.3f"))
-        val g2 = obj(names.map(n => n -> f"${pass2(n)._3}%.3f"))
-        val so = obj(solo.map { case (k, v) => k -> v.toString })
         val pr = probes.map(p => f"$p%.3f").mkString("[", ",", "]")
-        s""","passes":2,"pass1":$p1,"pass2":$p2,"unstable":$un,"leaks":$lk,"gc1":$g1,"gc2":$g2,"solo":$so,"probe":$pr,"contended":$contended,"prev_ref":${if (prev.isEmpty) "null" else "\"" + esc(prevPath) + "\""}"""
+        s""","passes":2,"pass1":$p1,"pass2":$p2,"unstable":$un,"leaks":$lk,"probe":$pr,"contended":$contended"""
       }
+    val records = obj(names.map(n => n -> runsOf(n).map(_.toJson).mkString("[", ",", "]")))
+    val warm = obj(warmup.map(r => r.name -> r.toJson))
     // Two renditions of the same result. stdout gets the COMPACT line —
     // headline figure, HEADLINE per-query minima, errors, contention flag.
     // The round driver keeps only a bounded tail (~2 KB) of captured
@@ -313,20 +220,22 @@ object Bench {
     // at its FRONT, which is what left "parsed": null three rounds
     // running. The compact line therefore carries only the ~11 headline
     // queries (≈0.7 KB — whole line fits the tail buffer); the full
-    // per-query map, passes, gc, and solo diagnostics live in the on-disk
+    // per-query map, passes and records live in the on-disk
     // copy the "full" field points at.
     val pr = probes.map(p => f"$p%.3f").mkString("[", ",", "]")
-    val sp = {
-      import scala.jdk.CollectionConverters._
-      obj(spillMb.asScala.toSeq.filter(_._2 >= 1.0).sortBy(_._1)
-        .map { case (k, v) => k -> f"$v%.1f" })
-    }
+    // Spill (MiB) per query, max over passes: a scale point whose wall
+    // clock moves with partition count but whose plan is unchanged is
+    // memory-bound, not plan-bound.
+    val sp = obj(names.flatMap { n =>
+      val mb = runsOf(n).map(_("exec.spill_mb")).max
+      if (mb >= 1.0) Some(n -> f"$mb%.1f") else None
+    })
     val qsHead = obj(results.collect {
       case (k, v, _) if headline(k) => k -> f"$v%.3f" })
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","total_all":$totalAll,"n_queries":${results.size},"n_ok":${ok.size},"queries":$qsHead,"errors":$errs,"contended":$contended,"probe":$pr,"spill_mb":$sp,"full":"BENCH_LAST.json","sf":"${esc(sfDir)}"}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","total_all":$totalAll,"queries":$qs,"errors":$errs$extra,"spill_mb":$sp,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","total_all":$totalAll,"queries":$qs,"errors":$errs$extra,"spill_mb":$sp,"warmup":$warm,"records":$records,"sf":"${esc(sfDir)}"}"""
     // Always leave a machine-readable copy on disk: sbt prefixes forked
     // stdout with "[info] ", which broke JSON-line scraping in the past.
     // EXCEPT for targeted profiling runs (explicit query args) without an

@@ -15,8 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      built elsewhere.
   *   2. `Graft.registerTables(spark, dir)` — the data directory's tables
   *      as temp views, opening the SQL door: `spark.sql("SELECT …")`.
-  *   3. `Graft.query(spark, dir, name)` — any of the ~200 named,
-  *      oracle-checked queries by name (`Graft.queryNames` lists them).
+  *   3. `Graft.query(spark, dir, name)` — any of the ~300 named,
+  *      oracle-checked queries by name (`Graft.queryNames` lists them);
+  *      `Graft.record(spark, dir, name)` runs one and returns its
+  *      per-query record.
   *
   * Specialist surfaces live in their modules and take plain DataFrames:
   * `graft.llm.Dedup` (minhash/simhash/containment/passage near-dup,
@@ -50,6 +52,14 @@ object Graft {
     install(spark)
     build(spark, dir)
   }
+
+  /** Build and run a named query, under a job group of its own, to the
+    * `noop` sink, and return where its time went: build, Catalyst phases,
+    * jobs, stages, tasks, bytes and rows out ([[api.QueryRecord]]). A
+    * failed query returns a record carrying the error. */
+  def record(spark: SparkSession, dir: String, name: String): api.QueryRecord =
+    api.QueryRecord.measure(spark, name)(query(spark, dir, name))(
+      _.write.format("noop").mode("overwrite").save())._1
 
   /** Adds the native functions and the as-of join strategy to a session
     * built without `GraftExtensions` (sessions from [[session]] already

@@ -7,7 +7,8 @@ import org.apache.spark.sql.DataFrame
   * equally, a SMALL single-row-group parquet file — repartition immediately
   * after the read).
   *
-  * The problem, measured at sf0.1 (round 14, StageProfile): every fixture
+  * The problem, measured at sf0.1 (round 14, per-stage profile; re-measure
+  * with `graft.Bench <query>`, whose record has the task counts): every fixture
   * table is one parquet row group, so any scan yields 1–3 real tasks no
   * matter how many cores the session has. Downstream map work that is
   * CPU-bound per row (MD5 grids, shingling, MinHash, BPE apply, vector

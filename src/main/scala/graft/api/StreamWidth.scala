@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * (optimization-guide §2.2 "fewer, larger reduce partitions" + §5 state
   * sizing).
   *
-  * The problem, measured at sf0.1 (round 15, StageProfile): a stateful
+  * The problem, measured at sf0.1 (round 15, per-stage profile; re-measure
+  * with `graft.Bench <query>`, whose record has the stage counts): a stateful
   * micro-batch opens one state store PER shuffle partition, and the
   * per-store constant (RocksDB instance open, changelog commit, snapshot
   * bookkeeping) dominates when state is small — the medallion silver

@@ -13,9 +13,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Why a custom expression (guide: eliminate non-codegen expressions in
   * the hot path): the same computation spelled
   * `transform(sequence(0, b-1), bb -> xxhash64(element_at(sig, bb*r+1), …))`
-  * is a higher-order lambda, which Spark evaluates INTERPRETED — round-15
-  * StageProfile measured the band Generate stages at ~0.5 s of task time
-  * per 300 documents, dominating every LSH candidate build. This is one
+  * is a higher-order lambda, which Spark evaluates INTERPRETED — a round-15
+  * per-stage profile measured the band Generate stages at ~0.5 s of task time
+  * per 300 documents, dominating every LSH candidate build (`graft.Bench
+  * <query>`'s record re-measures the task time). This is one
   * tight codegen loop per row over the already-stored signature.
   *
   * Bit-compatibility: Spark's multi-arg `xxhash64` folds left with seed 42

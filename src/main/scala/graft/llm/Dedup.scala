@@ -280,7 +280,8 @@ object Dedup extends QueryModule {
     // band_hashes = the native codegen spelling of
     // transform(sequence(0, b-1), bb -> xxhash64(<r sig slices>)) — the HOF
     // form ran interpreted in every LSH candidate build (guide §4 / round-15
-    // StageProfile); identities are bit-identical (BandHashesSpec).
+    // stage profile; `Bench <query>`'s record re-measures); identities are
+    // bit-identical (BandHashesSpec).
     shingleArrays(corpus)
       .select(col("doc_id"), expr(s"minhash_sig(sh, ${r * b})").as("sig"))
       .select(col("doc_id"), posexplode(expr(s"band_hashes(sig, $r, $b)")))
@@ -1116,8 +1117,8 @@ object Dedup extends QueryModule {
           .select(col("doc_a"), col("doc_b"), lit(1).as("c"))
         // Truth leg from the STORED md5 shingle keys (shingle-once): the
         // from-text spelling re-tokenized + re-hashed the whole corpus a
-        // second time inside this one query (round-15 StageProfile: ~1 s
-        // of 32-task CPU + 2.3 s GC). Keys are bit-identical
+        // second time inside this one query (round-15 stage profile: ~1 s
+        // of 32-task CPU + 2.3 s GC; `Bench <query>`'s record re-measures). Keys are bit-identical
         // (TextFeaturesSpec), so the PPJoin pair set — and the oracle
         // hash — are unchanged.
         val truth = exactJaccardPairsFromKeys(

@@ -69,8 +69,8 @@ object Graph extends QueryModule {
     // Loop width follows the materialized edge count (guide §2.2): the
     // relaxation frames are O(|nodes|) and the per-round join moves
     // O(|edges|) — full session width on a 625-row trade graph only buys
-    // per-stage scheduling and codegen overhead (round-15 StageProfile:
-    // ~14 × 140 ms two-task stages). Billion-edge graphs still get the
+    // per-stage scheduling and codegen overhead (round-15 stage profile:
+    // ~14 × 140 ms two-task stages; `Bench <query>`'s record re-measures). Billion-edge graphs still get the
     // deployment's configured width.
     StreamWidth.withShufflePartitions(
       edges.sparkSession, StreamWidth.forRows(edges.sparkSession, nEdges)) {
@@ -100,7 +100,8 @@ object Graph extends QueryModule {
     // lineage is the full 5-way fact join + decimal aggregate — without a
     // materialization each round re-executes that subtree (ReusedExchange
     // only deduplicates identical exchanges within one stage graph;
-    // round-15 StageProfile showed the 600k-row join+agg running twice).
+    // a round-15 stage profile showed the 600k-row join+agg running twice;
+    // `Bench <query>`'s record re-measures).
     // Same cure as every other graph input: checkpoint once, O(|edges|).
     val norm = checkpointed(norm0)
     // (Unlike the other loops, the rounds stay LAZY here: every join
@@ -215,8 +216,9 @@ object Graph extends QueryModule {
         $"o_custkey" === $"c_custkey")
       .select($"o_orderkey", $"c_nk", $"src")
     // Widen the single-row-group fixture scan (guide §2.5 via Fanout): the
-    // edge build's join+agg ran on 3 scan tasks at sf0.1 (StageProfile:
-    // 0.42 s scan stage + 0.5 s agg stage on ≤9 tasks with 29 cores idle);
+    // edge build's join+agg ran on 3 scan tasks at sf0.1 (round-15 stage
+    // profile: 0.42 s scan stage + 0.5 s agg stage on ≤9 tasks with 29
+    // cores idle; `Bench <query>`'s record re-measures);
     // keyed on l_orderkey, no-op at cluster scale.
     graft.api.Fanout.widenBy(
       Tables.load(s, dir, "lineitem")
@@ -343,7 +345,8 @@ object Graph extends QueryModule {
         // nation maps broadcast. Weight summed in decimal.
         // Same §2.5 widening as tradeEdges: the fixture scan is one row
         // group, so the 5-way join + decimal agg otherwise runs on 3 tasks
-        // (StageProfile: 2 × 1.25 s stages at sf0.1). No-op at scale.
+        // (round-15 stage profile: 2 × 1.25 s stages at sf0.1; `Bench
+        // <query>`'s record re-measures). No-op at scale.
         val edges = graft.api.Fanout.widenBy(
           lineitem.select($"l_orderkey", $"l_suppkey",
             $"l_extendedprice", $"l_discount"), $"l_orderkey")

@@ -1862,8 +1862,9 @@ object RelationalQueries extends QueryModule {
     // ORACLE IS THE PLAIN JOIN: the bloom is semantics-transparent
     // (the shuffle-hash join verifies every survivor, false negatives
     // impossible by construction), so the hash match proves exactness
-    // of the whole prune→join chain, and the spec + BLOOM_JOIN bench
-    // artifact record the pruned-vs-unpruned row and wall-clock deltas.
+    // of the whole prune→join chain. The spec and the BLOOM_JOIN_sf10.json
+    // history record the pruned-vs-unpruned row and wall-clock deltas;
+    // `Bench rel_bloom_join`'s record gives its shuffle bytes and rows out.
     "rel_bloom_join" -> QuerySpec(
       fn = (s, dir) => {
         import s.implicits._
@@ -1938,8 +1939,8 @@ object RelationalQueries extends QueryModule {
       fn = (s, dir) => {
         import s.implicits._
         // §2.5 widening: the salt + probe-side join work otherwise runs on
-        // the fixture's 3 scan tasks (round-15 StageProfile: one 0.9 s
-        // 3-task stage). The salt stays row-deterministic and the join
+        // the fixture's 3 scan tasks (round-15 stage profile: one 0.9 s
+        // 3-task stage; `Bench <query>`'s record re-measures). The salt stays row-deterministic and the join
         // result is salt-independent; no-op at cluster scale.
         val li = graft.api.Fanout.widenBy(
           t(s, dir, "lineitem").select($"l_orderkey", $"l_extendedprice"),

@@ -1290,8 +1290,9 @@ object TimeWindows extends QueryModule {
           .distinct()
         // §2.5 widening before the 24× expansion: AQE coalesces the small
         // deduped pair set to one partition, so the explode + partial
-        // distinct-agg ran on a single task (round-15 StageProfile: 0.9 s
-        // on 1 task). Keyed on user_id; no-op once the pair set is big.
+        // distinct-agg ran on a single task (round-15 stage profile: 0.9 s
+        // on 1 task; `Bench <query>`'s record re-measures). Keyed on
+        // user_id; no-op once the pair set is big.
         graft.api.Fanout.widenBy(pairs, $"user_id")
           .select($"user_id", explode(expr(
             "sequence(hour, hour + INTERVAL 23 HOURS, INTERVAL 1 HOUR)"))

@@ -51,7 +51,14 @@ object FaultInject {
 
   /** A kill landed when it was fired while the work was in flight and the
     * scheduler saw at least one task failure or executor removal in the
-    * work's window. Anything else is a MISS, never a vacuous pass. */
+    * work's window. Anything else is a MISS, never a vacuous pass.
+    *
+    * A row that lands on an executor removal alone (no task failure) shows
+    * that the executor died mid-work and the result still matched; it does
+    * not show that a task was re-run. 8 of the 18 rows of the committed
+    * FAULTS.json are such rows (`hll`, `llm_bpe_train`, `llm_dedup_semantic`,
+    * `llm_mm_video_meta`, `ts_drawdown`, `ts_ohlc`, `ts_var_cvar`,
+    * `llm_select_budget`). */
   def landed(firedInFlight: Boolean, taskFailures: Int, executorsRemoved: Int): Boolean =
     firedInFlight && (taskFailures > 0 || executorsRemoved > 0)
 

@@ -1,10 +1,9 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import graft.{Graft, GraftSession}
+import graft.api.QueryRecord
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Spill-under-memory-pressure probe: the "degrades to disk, not to OOM"
   * claim, exercised instead of asserted.
@@ -17,9 +16,9 @@ import java.util.concurrent.atomic.AtomicLong
   * working set) and proves, per query:
   *
   *   1. the run COMPLETES under pressure — no OOM, no lost executor;
-  *   2. pressure was REAL: the stage metrics report nonzero
-  *      memoryBytesSpilled/diskBytesSpilled (otherwise the probe reports
-  *      NO_SPILL so a vacuous pass cannot masquerade as evidence);
+  *   2. pressure was REAL: the query's [[QueryRecord]] reports nonzero
+  *      `exec.spill_mb` (otherwise `spilled` is false, so a vacuous pass
+  *      cannot masquerade as evidence);
   *   3. the result is BIT-IDENTICAL to the roomy-memory run of the same
   *      query ([[FaultInject.digest]], order-independent) — the spill path
   *      changes operator internals, never semantics.
@@ -38,54 +37,22 @@ import java.util.concurrent.atomic.AtomicLong
   * a packaged jar on the executor classpath.
   */
 object SpillProbe {
-  private val memSpilled = new AtomicLong(0L)
-  private val diskSpilled = new AtomicLong(0L)
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val queries = args.drop(1).toSeq
     val out = sys.env.getOrElse("SPARK_GRAFT_SPILL_OUT", "/tmp/spill_probe.json")
     val spark = GraftSession.builder("graft-spill-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          memSpilled.addAndGet(m.memoryBytesSpilled)
-          diskSpilled.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
     val results = queries.map { name =>
-      // Per-query metrics are deltas against a pre-query baseline (never a
-      // reset: listener events from the PREVIOUS query that straggle in
-      // past its drain window land before this baseline is taken, instead
-      // of being credited to this query).
-      val (mem0, disk0) = (memSpilled.get, diskSpilled.get)
-      val t0 = System.nanoTime()
-      val attempt =
-        try Right(FaultInject.digest(SparkEntry.queries(name)(spark, sfDir)))
-        catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // Listener events trail task completion; wait until the counters are
-      // stable for two consecutive polls (up to 20 s) rather than trusting
-      // one fixed sleep under a deliberately-starved cluster.
-      var (pm, pd) = (-1L, -1L)
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 20000) {
-        Thread.sleep(500); waited += 500
-        val (m, dd) = (memSpilled.get, diskSpilled.get)
-        if (m == pm && dd == pd) stable += 1 else { stable = 0; pm = m; pd = dd }
-      }
-      val (mem, disk) = (memSpilled.get - mem0, diskSpilled.get - disk0)
-      val line = attempt match {
-        case Right(FaultInject.Digest(hash, rows)) =>
-          f"""{"query":"$name","ok":true,"rows":$rows,"hash":"$hash","sec":$sec%.2f,""" +
-            s""""memory_spilled_bytes":$mem,"disk_spilled_bytes":$disk,""" +
-            s""""spilled":${disk > 0 || mem > 0}}"""
-        case Left(err) =>
-          s"""{"query":"$name","ok":false,"error":${jsonStr(err)}}"""
+      val (rec, digest) = QueryRecord.measure(spark, name)(Graft.query(spark, sfDir, name))(
+        FaultInject.digest)
+      val spillMb = rec("exec.spill_mb")
+      val line = digest match {
+        case Some(FaultInject.Digest(hash, rows)) =>
+          f"""{"query":"$name","ok":true,"rows":$rows,"hash":"$hash","sec":${rec("wall_ms") / 1e3}%.2f,""" +
+            f""""spill_mb":$spillMb%.1f,"spilled":${spillMb > 0}}"""
+        case None =>
+          s"""{"query":"$name","ok":false,"error":${jsonStr(rec.error.getOrElse(""))}}"""
       }
       println(s"[spill] $line")
       line

@@ -1,12 +1,22 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 
 /** Bridge into `private[sql] Dataset.ofRows` so the library can hand a
   * self-constructed logical plan (e.g. [[graft.plans.AsofJoinPlan]]) back to
   * the session — the one hop a whole-operator extension needs that
-  * `SparkSessionExtensions` doesn't expose. No other internals touched. */
+  * `SparkSessionExtensions` doesn't expose — and, for
+  * [[graft.api.QueryRecord]], to the listener bus (to read events only once
+  * all are delivered) and to the QueryExecution an execution's end event
+  * carries. */
 object GraftSqlBridge {
   def ofRows(session: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
+
+  def waitForListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  def queryExecution(e: SparkListenerSQLExecutionEnd): Option[QueryExecution] = Option(e.qe)
 }

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the source tree for `"name" -> QuerySpec` declarations and asserts
   * every declared name is unique across the whole tree, and that the
   * runtime registry carries exactly the declared set. The same source
-  * scan guards the one-install rule, the action-free loop widths and the
-  * one fault harness. */
+  * scan guards the one-install rule, the action-free loop widths, the
+  * one fault harness and the one per-query record. */
 class RegistryDupSpec extends AnyFunSuite {
 
   private def scalaSources(dir: java.io.File): Seq[java.io.File] =
@@ -81,5 +81,13 @@ class RegistryDupSpec extends AnyFunSuite {
     assert(containing("src/main/scala", """kill"?,?\s*"?-9|pgrep|SparkListenerExecutorRemoved""".r) ===
       Seq("FaultInject.scala"))
     assert(containing("src/main/scala/graft/tools", "FAULTS".r) === Seq("FaultInject.scala"))
+  }
+
+  test("listeners are added only by the per-query record and the fault harness") {
+    val adds = "addSparkListener|listenerManager\\.register".r
+    val owners = scalaSources(new java.io.File("src/main/scala"))
+      .filter(f => adds.findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined)
+      .map(_.getPath.stripPrefix("src/main/scala/graft/")).sorted
+    assert(owners === Seq("api/QueryRecord.scala", "tools/FaultInject.scala"))
   }
 }
