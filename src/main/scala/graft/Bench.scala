@@ -35,9 +35,10 @@ import java.nio.file.{Files, Paths}
   * Each run is one [[Graft.record]]: its `wall_ms` is the timing, and
   * the whole record (build, Catalyst phases, jobs, stages, tasks, bytes,
   * spill, rows out) lands in the on-disk JSON under "records", one per
-  * pass. The untimed warm-up run is recorded too, under "warmup", so a
-  * cold build (text or image features, BPE) stays visible. Targeted runs
-  * (`Bench <query...>`) are how one query's layers are attributed.
+  * pass. The untimed warm-up runs are recorded too, under "warmup", so a
+  * cold build (text or image features, BPE) stays visible: a full run
+  * warms the first query, a targeted run (`Bench <query...>`, how one
+  * query's layers are attributed) warms every named query.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -64,22 +65,26 @@ object Bench {
         leaks.getOrElseUpdate(name, "cached plan not released")
         spark.sharedState.cacheManager.clearCache()
       }
-      if (spark.streams.active.nonEmpty) {
+      // Any session's stream: a drain runs on a fork of this one.
+      val running = streaming.Drain.active(spark)
+      if (running.nonEmpty) {
         leaks.getOrElseUpdate(name, "streaming query left running")
-        spark.streams.active.foreach(q => scala.util.Try(q.stop()))
+        running.foreach(q => scala.util.Try(q.stop()))
       }
       // Streaming residue: a finished streaming query (e.g. the AvailableNow
       // medallion run) leaves its RocksDB state-store providers cached in
       // the executor plus a maintenance thread pool — measured ~20-35% tax
       // on the batch queries that follow. Unload them; the next streaming
       // query reloads lazily. No-op when nothing is cached.
-      scala.util.Try(
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop())
+      streaming.Drain.release(spark)
     }
 
+    val twoPass = args.isEmpty
     // Untimed warm-up against the measured dataset so JIT/codegen and file
-    // listing don't land in the first query's measurement.
-    val warmup = names.headOption.map { n =>
+    // listing don't land in the first query's measurement. A targeted run
+    // warms every named query: each one's own cold build (text or image
+    // features, BPE) would otherwise land in its timed run.
+    val warmup = (if (twoPass) names.take(1) else names).map { n =>
       val r = run(n)
       checkClean(n)
       r.error.foreach(e => System.err.println(s"[bench] warm-up $n failed: $e"))
@@ -113,7 +118,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    val twoPass = args.isEmpty
     def timedPass(order: Seq[String]): Map[String, api.QueryRecord] =
       order.map { name =>
         // Targeted profiling measures each query against a settled heap:

@@ -10,7 +10,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
@@ -20,7 +20,9 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
   *   - `wall_ms`; `build.ms` and `build.jobs`, the DataFrame construction
   *     and the Spark jobs it ran eagerly;
   *   - `catalyst.{analysis,optimization,planning}_ms`, summed over every
-  *     SQL execution of the query;
+  *     SQL execution of the query; analysis adds the built frame's own,
+  *     which runs eagerly while the frame is built and reaches no
+  *     listener (unless the action executes that very frame);
   *   - `exec.{jobs,stages,tasks}` and `exec.{task,cpu,gc}_ms`, over every
   *     job of the query, build jobs included;
   *   - `exec.{scan,shuffle_read,shuffle_write,spill}_mb` (MiB);
@@ -93,10 +95,12 @@ object QueryRecord {
     sc.setJobGroup(group, name)
     val t0 = System.nanoTime()
     var built = t0
+    var frame: Option[QueryExecution] = None
     val outcome =
       try {
         val df = build
         built = System.nanoTime()
+        frame = Some(df.queryExecution)
         Right(act(df))
       } catch {
         case e: Throwable if NonFatal(e) || e.isInstanceOf[StackOverflowError] => Left(e)
@@ -112,11 +116,14 @@ object QueryRecord {
     def sum(f: StageRec => Double) = stages.map(f).sum
     val wall = (end - t0) / 1e6
     val taskMs = sum(_.taskMs)
+    val builtAnalysisMs = frame.filterNot(acc.executed.contains)
+      .flatMap(_.tracker.phases.get("analysis"))
+      .fold(0.0)(p => (p.endTimeMs - p.startTimeMs).toDouble)
     val fields = ListMap(
       "wall_ms" -> wall,
       "build.ms" -> (built - t0) / 1e6,
       "build.jobs" -> acc.jobRoots.asScala.count(_ != finalRoot).toDouble,
-      "catalyst.analysis_ms" -> acc.phaseMs("analysis"),
+      "catalyst.analysis_ms" -> (acc.phaseMs("analysis") + builtAnalysisMs),
       "catalyst.optimization_ms" -> acc.phaseMs("optimization"),
       "catalyst.planning_ms" -> acc.phaseMs("planning"),
       "exec.jobs" -> acc.jobRoots.size.toDouble,
@@ -148,6 +155,7 @@ object QueryRecord {
     val executions = new ConcurrentLinkedQueue[Long]()
     val phases = new ConcurrentHashMap[String, java.lang.Double]()
     val rowsOut = new ConcurrentHashMap[Long, Long]()
+    val executed = ConcurrentHashMap.newKeySet[QueryExecution]()
     @volatile var lastRoot = -1L
     def phaseMs(p: String): Double = phases.getOrDefault(p, 0.0)
   }
@@ -199,6 +207,7 @@ object QueryRecord {
       case e: SparkListenerSQLExecutionEnd =>
         Option(byExecution.get(e.executionId)).zip(GraftSqlBridge.queryExecution(e)).foreach {
           case (a, qe) =>
+            a.executed.add(qe)
             qe.tracker.phases.foreach { case (p, s) =>
               a.phases.merge(p, (s.endTimeMs - s.startTimeMs).toDouble, (x, y) => x + y)
             }

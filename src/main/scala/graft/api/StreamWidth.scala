@@ -23,8 +23,8 @@ import org.apache.spark.sql.SparkSession
   * admission cap these drains use), floored at 1 and capped at the
   * session's configured shuffle width — so a 100 TB backlog still fans
   * out to the deployment's full width while a kilobyte fixture drain pays
-  * for exactly one store. `SPARK_GRAFT_STREAM_STATE_PARTITIONS` overrides
-  * the derivation outright (same contract as the other scale knobs).
+  * for exactly one store. Every stream drain starts at this width on a
+  * fork of the caller's session ([[graft.streaming.Drain]]).
   *
   * Spark pins a stateful query's width into its checkpoint
   * (OffsetSeqMetadata), so later waves of the same drain keep wave 1's
@@ -38,44 +38,41 @@ object StreamWidth {
 
   /** Width for a drain whose input lives under `paths` (missing paths
     * count zero bytes). */
-  def forInput(spark: SparkSession, paths: String*): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS") match {
-      case Some(v) => v.toInt
-      case None =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val bytes = paths.map { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          val fs = path.getFileSystem(conf)
-          if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
-        }.sum
-        val want = (bytes + targetBytesPerPartition - 1) / targetBytesPerPartition
-        math.max(1L, math.min(want,
-          spark.sessionState.conf.numShufflePartitions.toLong)).toInt
-    }
+  def forInput(spark: SparkSession, paths: String*): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bytes = paths.map { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      val fs = path.getFileSystem(conf)
+      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+    }.sum
+    val want = (bytes + targetBytesPerPartition - 1) / targetBytesPerPartition
+    math.max(1L, math.min(want,
+      spark.sessionState.conf.numShufflePartitions.toLong)).toInt
+  }
 
   /** Width for an iterate-a-join loop whose per-round state is a
     * MATERIALIZED frame of `rows` rows (label propagation, Bellman-Ford,
     * peeling): one partition per `rowsPerPartition`, floored at 1 and
     * capped at the session width — a 25-node trade graph pays one
     * partition per round while a billion-edge pair set still fans out to
-    * the deployment's configured width. `SPARK_GRAFT_LOOP_PARTITIONS`
-    * overrides the derivation. */
+    * the deployment's configured width. */
   def forRows(spark: SparkSession, rows: Long,
       rowsPerPartition: Long = 500000L): Int =
-    sys.env.get("SPARK_GRAFT_LOOP_PARTITIONS") match {
-      case Some(v) => v.toInt
-      case None => math.max(1L, math.min(rows / rowsPerPartition + 1L,
-        spark.sessionState.conf.numShufflePartitions.toLong)).toInt
-    }
+    math.max(1L, math.min(rows / rowsPerPartition + 1L,
+      spark.sessionState.conf.numShufflePartitions.toLong)).toInt
 
   /** Run `body` with `spark.sql.shuffle.partitions = n`, restoring the
-    * previous value afterwards (the width a streaming query starts under
-    * is the width its micro-batch plans and state stores use). AQE's
-    * `initialPartitionNum` is pinned to the same value — the session sets
-    * it explicitly, and it, not the static width, seeds every adaptive
-    * shuffle. NOTE: the width applies to plans EXECUTED inside `body`
-    * (streaming starts, checkpoints, counts); a lazily returned frame
-    * plans under the restored session conf. */
+    * previous value afterwards. AQE's `initialPartitionNum` is pinned to
+    * the same value — the session sets it explicitly, and it, not the
+    * static width, seeds every adaptive shuffle. NOTE: the width applies
+    * to plans EXECUTED inside `body` (checkpoints, counts); a lazily
+    * returned frame plans under the restored session conf.
+    *
+    * This sets the SHARED session's conf, so a query planned concurrently
+    * on another thread plans at `n` too. Streams no longer use it: a drain
+    * sets its width on a fork ([[graft.streaming.Drain]]). Its callers are
+    * the five iterate-a-join loops (`Graph` ×4, `Dedup.labels`) and the
+    * perfbench stream probe. */
   def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     // (A measured-and-reverted variant also disabled whole-stage codegen
     // for width-1 loop bodies — per-round compile vs interpreted execution

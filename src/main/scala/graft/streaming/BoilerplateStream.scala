@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Incremental boilerplate-line detection — the STREAMING maintenance of
@@ -78,22 +78,9 @@ object BoilerplateStream {
     * lines to `outDir`; restarts resume from the checkpoint. */
   def runAvailableNow(spark: SparkSession, landingDir: String,
       outDir: String, checkpointDir: String, minDocs: Int,
-      maxFilesPerTrigger: Int = 10): Unit = {
-    val q: StreamingQuery = newlyBanned(
-      spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(landingDir),
-      minDocs)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 10): Unit =
+    Drain(spark, Seq(landingDir))(s => Seq(Drain.toParquet(newlyBanned(
+      Drain.files(s, docSchema, landingDir, maxFilesPerTrigger), minDocs), outDir, checkpointDir)))
 
   /** The accumulated ban list (commit-log-protected read of the sink).
     * Read with an explicit schema: before the stream's first emission the

@@ -5,7 +5,6 @@ import graft.operators.CdfSketch
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Incremental CDF-sketch maintenance — the [[DistinctStream]] treatment
@@ -50,28 +49,10 @@ object CdfStream {
     * checkpoint, and a replayed batch overwrites its own delta. */
   def runAvailableNow(spark: SparkSession, landingDir: String,
       stateDir: String, checkpointDir: String, lo: Double, w: Double,
-      maxFilesPerTrigger: Int = 10): Unit = {
-    // Scale-adaptive batch width (guide §2.2): the delta is O(groups ×
-    // 513) rows per batch, so width follows admitted bytes, not cores.
-    graft.api.StreamWidth.withShufflePartitions(spark,
-      graft.api.StreamWidth.forInput(spark, landingDir)) {
-      val q: StreamingQuery = spark.readStream
-        .schema(obsSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(landingDir)
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b, id, stateDir, lo, w)
-        }
-        .start()
-      q.awaitTermination()
-    }
-    if (spark.streams.active.isEmpty)
-      scala.util.Try(
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop())
-  }
+      maxFilesPerTrigger: Int = 10): Unit =
+    Drain(spark, Seq(landingDir))(s => Seq(Drain.eachBatch(
+      Drain.files(s, obsSchema, landingDir, maxFilesPerTrigger), checkpointDir)(
+      applyBatch(_, _, stateDir, lo, w))))
 
   /** The accumulated sketch: per-(g, bucket) total counts. */
   def sketchTable(spark: SparkSession, stateDir: String): DataFrame =

@@ -4,7 +4,6 @@ import graft.llm.Dedup
 import graft.sources.SortedRunIndex
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming corpus ingestion with INCREMENTAL near-dup dedup — the
@@ -146,29 +145,13 @@ object CurateStream {
       stateDir: String, checkpointDir: String,
       gate: GateConfig = GateConfig(),
       maxFilesPerTrigger: Int = 10,
-      maintainAfterDrain: Boolean = true): Unit = {
-    // Scale-adaptive batch width (guide §2.2): per-batch work is
-    // O(increment) by design, so the micro-batch shuffles should be as
-    // wide as the admitted bytes warrant, not as wide as the core count.
-    graft.api.StreamWidth.withShufflePartitions(spark,
-      graft.api.StreamWidth.forInput(spark, landingDir)) {
-      val q: StreamingQuery = spark.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(landingDir)
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b, id, stateDir, gate)
-        }
-        .start()
-      q.awaitTermination()
-      // Post-drain maintenance: fold this wave's deltas into the sorted
-      // runs so the NEXT wave's probes stay flat. The drained stream has
-      // committed past every folded batch, so a restart can only replay
-      // the kept-out newest delta (keepLast = 1).
-      if (maintainAfterDrain) maintain(spark, stateDir)
-    }
-  }
+      maintainAfterDrain: Boolean = true): Unit =
+    // Post-drain maintenance folds this wave's deltas into the sorted runs
+    // so the NEXT wave's probes stay flat. The drained stream has committed
+    // past every folded batch, so a restart can only replay the kept-out
+    // newest delta (keepLast = 1).
+    Drain(spark, Seq(landingDir))(
+      s => Seq(Drain.eachBatch(Drain.files(s, docSchema, landingDir, maxFilesPerTrigger),
+        checkpointDir)(applyBatch(_, _, stateDir, gate))),
+      s => { if (maintainAfterDrain) maintain(s, stateDir); Nil })
 }

@@ -4,7 +4,7 @@ import graft.functions.Hll
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** Incremental distinct-count maintenance — the STREAMING form of the
@@ -65,33 +65,9 @@ object DistinctStream {
     * to `outDir`; restarts resume from the checkpoint. */
   def runAvailableNow(spark: SparkSession, landingDir: String,
       outDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): Unit = {
-    // Scale-adaptive state width (guide §2.2/§5): the register state is
-    // O(groups × 4096) at ANY input volume, so the store count should
-    // follow the admitted bytes, not the core count — see StreamWidth.
-    graft.api.StreamWidth.withShufflePartitions(spark,
-      graft.api.StreamWidth.forInput(spark, landingDir)) {
-      val q: StreamingQuery = newRegisters(
-        spark.readStream
-          .schema(obsSchema)
-          .option("maxFilesPerTrigger", maxFilesPerTrigger)
-          .parquet(landingDir))
-        .writeStream
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // Batch-style drain leaves no stream behind — drop the cached
-    // state-store providers so they don't tax subsequent batch work in
-    // the same JVM (the Medallion.runAvailableNow discipline).
-    if (spark.streams.active.isEmpty)
-      scala.util.Try(
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop())
-  }
+      maxFilesPerTrigger: Int = 10): Unit =
+    Drain(spark, Seq(landingDir))(s => Seq(Drain.toParquet(newRegisters(
+      Drain.files(s, obsSchema, landingDir, maxFilesPerTrigger)), outDir, checkpointDir)))
 
   /** The current register table: per-key MAX over the append sink (ranks
     * are monotone, so the max IS the latest). Explicit schema — an early

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.{MmFeatures, Multimodal}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming maintenance of the decoded image-feature table — the
@@ -52,16 +51,7 @@ object FeatureStream {
       landing: String,
       featuresDir: String,
       cp: String,
-      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream
-      .schema(idSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landing)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", cp)
-      .foreachBatch((b: DataFrame, id: Long) => applyBatch(b, id, featuresDir))
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 1): Unit =
+    Drain(spark, Seq(landing))(s => Seq(Drain.eachBatch(
+      Drain.files(s, idSchema, landing, maxFilesPerTrigger), cp)(applyBatch(_, _, featuresDir))))
 }

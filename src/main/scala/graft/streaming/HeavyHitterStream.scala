@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Streaming approximate heavy hitters over an unbounded token stream —
@@ -194,18 +193,8 @@ object HeavyHitterStream {
     * from the checkpoint and replayed batches rebuild identical state. */
   def runAvailableNow(spark: SparkSession, landingDir: String,
       stateDir: String, checkpointDir: String, m: Int,
-      maxFilesPerTrigger: Int = 10): Unit = {
-    val q: StreamingQuery = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(b, id, stateDir, m)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Int = 10): Unit =
+    Drain(spark, Seq(landingDir))(s => Seq(Drain.eachBatch(
+      Drain.files(s, docSchema, landingDir, maxFilesPerTrigger), checkpointDir)(
+      applyBatch(_, _, stateDir, m))))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.llm.{VectorIndex, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField, StructType}
 
 /** Streaming maintenance of the persisted IVF-PQ vector index
@@ -112,18 +111,8 @@ object IndexStream {
   def runAvailableNow(spark: SparkSession, landingDir: String,
       indexDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 10,
-      semanticTau: Option[Double] = None): Unit = {
-    val q: StreamingQuery = spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(b, id, indexDir, semanticTau)
-      }
-      .start()
-    q.awaitTermination()
-  }
+      semanticTau: Option[Double] = None): Unit =
+    Drain(spark, Seq(landingDir))(s => Seq(Drain.eachBatch(
+      Drain.files(s, vecSchema, landingDir, maxFilesPerTrigger), checkpointDir)(
+      applyBatch(_, _, indexDir, semanticTau))))
 }

@@ -4,7 +4,6 @@ import graft.operators.KmvSketch
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Incremental KMV-sketch maintenance — the [[CdfStream]] treatment for
@@ -44,29 +43,10 @@ object KmvStream {
     * checkpoint, and a replayed batch overwrites its own delta. */
   def runAvailableNow(spark: SparkSession, landingDir: String,
       stateDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 10): Unit = {
-    // Scale-adaptive batch width (guide §2.2): each delta is ≤ k hashes
-    // per group, so the per-batch shuffle should be as wide as the
-    // admitted bytes warrant, not as wide as the core count.
-    graft.api.StreamWidth.withShufflePartitions(spark,
-      graft.api.StreamWidth.forInput(spark, landingDir)) {
-      val q: StreamingQuery = spark.readStream
-        .schema(obsSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(landingDir)
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          applyBatch(b, id, stateDir)
-        }
-        .start()
-      q.awaitTermination()
-    }
-    if (spark.streams.active.isEmpty)
-      scala.util.Try(
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop())
-  }
+      maxFilesPerTrigger: Int = 10): Unit =
+    Drain(spark, Seq(landingDir))(s => Seq(Drain.eachBatch(
+      Drain.files(s, obsSchema, landingDir, maxFilesPerTrigger), checkpointDir)(
+      applyBatch(_, _, stateDir))))
 
   /** The accumulated per-group sketch: explode the batch deltas and
     * re-aggregate — the aggregation IS the merge, so this equals the

@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.{DateType, StructField, StructType}
   *     Delta-less exactly-once mechanism, and downstream reads go through it).
   *   - silver (`02_silver_layer_processing.py:11-37`): streaming read of the
   *     bronze *sink* (append-only contract, S3), watermark + stateful dedup
-  *     via `dropDuplicatesWithinWatermark` (T1/T2 — the built-in whose state
-  *     eviction matches the reference's *intent*; plain `dropDuplicates` on a
+  *     via [[DeterministicDedup]] (T1/T2 — the state eviction of
+  *     `dropDuplicatesWithinWatermark`, which matches the reference's
+  *     *intent*, with a deterministic survivor; plain `dropDuplicates` on a
   *     non-time key never evicts and grows without bound), broadcast-join geo
   *     enrichment (U1 rewrite), checkpointed append sink (S6).
   *   - gold (`03_gold_layer_aggregation.py:11-42`): the reference's plan is
@@ -127,8 +128,7 @@ object Medallion {
       dirs: Dirs,
       trigger: Trigger = defaultTrigger,
       watermark: String = "2 hours",
-      maxFilesPerTrigger: Int = defaultTailMaxFilesPerTrigger,
-      deterministic: Boolean = true): StreamingQuery = {
+      maxFilesPerTrigger: Int = defaultTailMaxFilesPerTrigger): StreamingQuery = {
     val bronze = spark.readStream
       .schema(dated(ActivityPipeline.ParsedSchema))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -136,15 +136,11 @@ object Medallion {
     val watermarked = bronze
       .drop("event_date") // re-derived below; dedup state keys stay minimal
       .withWatermark("timestamp", watermark)
-    // Deterministic survivor by default: executor-loss fault injection
-    // caught dropDuplicatesWithinWatermark's arbitrary-first-arrival rule
-    // emitting different silver content across two drains of the same
-    // input (see DeterministicDedup's scaladoc). The legacy operator stays
-    // reachable for semantics parity with stock Spark.
-    val deduped =
-      if (deterministic) DeterministicDedup.dedup(watermarked, watermark).toDF()
-      else watermarked.dropDuplicatesWithinWatermark("log_id")
-    ActivityPipeline.enrich(deduped)
+    // Deterministic survivor: executor-loss fault injection caught
+    // dropDuplicatesWithinWatermark's arbitrary-first-arrival rule emitting
+    // different silver content across two drains of the same input (see
+    // DeterministicDedup's scaladoc).
+    ActivityPipeline.enrich(DeterministicDedup.dedup(watermarked, watermark).toDF())
       .withColumn("event_date", to_date(col("timestamp")))
       .writeStream
       .format("parquet")
@@ -236,35 +232,15 @@ object Medallion {
   }
 
   /** Drain everything currently in `dirs.raw` through all three layers with
-    * `Trigger.AvailableNow`, sequentially (bronze → silver → gold), blocking
-    * until each finishes. Re-runnable: checkpoints make every layer pick up
-    * only new input. */
+    * `Trigger.AvailableNow`, sequentially (bronze → silver → gold), as one
+    * [[Drain]] sized by the raw backlog, each layer awaited for at most
+    * `timeoutMs`. Re-runnable: checkpoints make every layer pick up only
+    * new input. */
   def runAvailableNow(spark: SparkSession, dirs: Dirs, timeoutMs: Long = 300000L): Unit = {
     val t = Trigger.AvailableNow()
-    def await(q: StreamingQuery, layer: String): Unit =
-      require(q.awaitTermination(timeoutMs),
-        s"$layer did not drain within ${timeoutMs} ms — downstream layers not started")
-    // Scale-adaptive shuffle/state width for the whole drain (guide
-    // §2.2/§5): the silver dedup opens one state store per shuffle
-    // partition, and the per-store constant dominates small drains
-    // (measured 4.3 s → 1.7 s on the silver stage going 32 → 8 stores at
-    // sf0.1). Width follows the raw backlog's bytes — a 100 TB backlog
-    // still fans out to the deployment's configured width.
-    graft.api.StreamWidth.withShufflePartitions(spark,
-      graft.api.StreamWidth.forInput(spark, dirs.raw)) {
-      val (bv, bq) = startBronze(spark, dirs, t)
-      await(bv, "bronze-valid"); await(bq, "bronze-quarantine")
-      await(startSilver(spark, dirs, t), "silver")
-      await(startGold(spark, dirs, t), "gold")
-    }
-    // Batch-style drains leave no stream behind, so drop the streaming
-    // machinery too: cached RocksDB state-store providers + their
-    // maintenance pool otherwise tax subsequent batch work in the same JVM
-    // (~20-35% measured); the next drain reloads from the checkpoint. Only
-    // when nothing else is streaming — a concurrent query would just
-    // reload, but there is no reason to force that on it.
-    if (spark.streams.active.isEmpty)
-      scala.util.Try(
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop())
+    Drain(spark, Seq(dirs.raw), timeoutMs)(
+      s => { val (valid, quarantine) = startBronze(s, dirs, t); Seq(valid, quarantine) },
+      s => Seq(startSilver(s, dirs, t)),
+      s => Seq(startGold(s, dirs, t)))
   }
 }

@@ -3,8 +3,7 @@ package graft.streaming
 import graft.plans.MaterializedView
 import graft.plans.MaterializedView.MvDef
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** Streamed materialized-view maintenance — the [[CdfStream]] /
@@ -49,35 +48,21 @@ object MvStream {
   def runAvailableNow(spark: SparkSession, landingDir: String,
       schema: StructType, dfn: MvDef, checkpointDir: String,
       maxFilesPerTrigger: Int = 10, maxDrains: Int = 5): Unit = {
-    var attempt = 0
-    var adopted = false
-    while (!adopted) {
+    def attempt(n: Int): Unit = {
       val snap = MaterializedView.snapshot(spark, landingDir)
-      val q: StreamingQuery = spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(landingDir)
-        .writeStream
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          MaterializedView.streamBatch(b, dfn, id)
-        }
-        .start()
-      q.awaitTermination()
-      if (MaterializedView.snapshot(spark, landingDir).matches(snap)) {
+      Drain(spark, Seq(landingDir))(s => Seq(Drain.eachBatch(
+        Drain.files(s, schema, landingDir, maxFilesPerTrigger), checkpointDir)(
+        MaterializedView.streamBatch(_, dfn, _))))
+      if (MaterializedView.snapshot(spark, landingDir).matches(snap))
         MaterializedView.adopt(spark, landingDir, dfn, snap)
-        adopted = true
-      } else {
-        attempt += 1
-        require(attempt < maxDrains,
+      else {
+        require(n + 1 < maxDrains,
           s"$landingDir gained files during every one of $maxDrains " +
             "drain attempts — nothing adopted (queries keep the direct " +
             "plan); run the maintainer again during a quieter window")
+        attempt(n + 1)
       }
     }
-    if (spark.streams.active.isEmpty)
-      scala.util.Try(
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop())
+    attempt(0)
   }
 }

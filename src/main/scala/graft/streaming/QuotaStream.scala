@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Budget-capped streaming admission — the incremental form of
   * `llm_source_cap`: admit documents per source until that source's token
@@ -35,6 +35,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * state is |sources| rows per batch. Nothing rereads admitted text.
   */
 object QuotaStream {
+
+  /** Landing schema: one row per document. */
+  val docSchema: StructType = StructType.fromDDL("doc_id LONG, text STRING, source STRING")
 
   private def fs(spark: SparkSession, dir: String) =
     new org.apache.hadoop.fs.Path(dir)
@@ -95,21 +98,12 @@ object QuotaStream {
       .select("doc_id", "source", "n_tokens", "cum")
   }
 
-  /** Start the streaming admission over a landing directory of parquet
-    * document files. */
-  def start(spark: SparkSession, landingDir: String, stateDir: String,
+  /** Drain the parquet document files under `landingDir` through the
+    * admission; restarts resume from the checkpoint. */
+  def runAvailableNow(spark: SparkSession, landingDir: String, stateDir: String,
       checkpoint: String, capPerSource: Long,
-      maxFilesPerTrigger: Int = 10): StreamingQuery = {
-    val stream = spark.readStream
-      .schema("doc_id LONG, text STRING, source STRING")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(b, id, stateDir, capPerSource)
-      }
-      .start()
-  }
+      maxFilesPerTrigger: Int = 10): Unit =
+    Drain(spark, Seq(landingDir))(s => Seq(Drain.eachBatch(
+      Drain.files(s, docSchema, landingDir, maxFilesPerTrigger), checkpoint)(
+      applyBatch(_, _, stateDir, capPerSource))))
 }

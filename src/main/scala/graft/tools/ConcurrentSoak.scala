@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.streaming.{ActivityGenerator, Medallion}
+import graft.streaming.{ActivityGenerator, Drain, Medallion}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -18,10 +18,16 @@ import java.nio.file.{Files, Paths}
   * The contract under test: end-state EQUALITY — gold, silver, and
   * quarantine (minus its wall-clock column) after the concurrent run must
   * be bit-identical to a sequential run over the same raw files — plus no
-  * cross-talk (a batch-side drain must not stop the state-store machinery
-  * under the live medallion; the `spark.streams.active.isEmpty` guard in
-  * every runAvailableNow is exactly what this exercises). Interference is
-  * RECORDED, not asserted: per-query wall-clock solo vs concurrent.
+  * cross-talk:
+  *   - a batch-side drain must not stop the state-store machinery under
+  *     the live medallion ([[Drain.release]] waits until no stream is
+  *     active anywhere in the application);
+  *   - no drain changes the session's width: each concurrent batch query
+  *     records the shuffle width it started at, and the session's two
+  *     width keys are recorded after the run ([[Drain]] sets its width on
+  *     a fork).
+  * Interference is RECORDED, not asserted: per-query wall-clock solo vs
+  * concurrent.
   *
   * Usage: spark-submit --class graft.tools.ConcurrentSoak <jar>
   *   [sfDir] [workDir]     (env SPARK_GRAFT_SOAK_OUT = artifact path)
@@ -41,7 +47,8 @@ object ConcurrentSoak {
       goldEqual: Boolean, silverEqual: Boolean, quarantineEqual: Boolean,
       seqStreamSec: Double, conStreamSec: Double,
       soloQuerySec: Map[String, Double], conQuerySec: Map[String, Double],
-      queriesRun: Int)
+      queriesRun: Int, conQueryWidths: Seq[Int],
+      widthKeysAfter: Map[String, Option[String]])
 
   private def canonRows(spark: SparkSession, dir: String,
       drop: Seq[String] = Nil): Seq[String] = {
@@ -98,12 +105,14 @@ object ConcurrentSoak {
       finally streamDone = true
     }, "soak-streaming")
     val conTimes = scala.collection.mutable.Map[String, List[Double]]()
+    val conWidths = Seq.newBuilder[Int]
     var ran = 0
     streamThread.start()
     inPool(spark, "batch") {
       var i = 0
       while (!streamDone) {
         val q = mix(i % mix.size)
+        conWidths += spark.sessionState.conf.numShufflePartitions
         val (sec, _) = time(SparkEntry.queries(q)(spark, sfDir).collect().length)
         conTimes.updateWith(q)(l => Some(sec :: l.getOrElse(Nil)))
         ran += 1
@@ -123,7 +132,8 @@ object ConcurrentSoak {
       seqStreamSec = seqSec, conStreamSec = conStreamSec,
       soloQuerySec = soloTimes,
       conQuerySec = conTimes.map { case (k, v) => k -> v.min }.toMap,
-      queriesRun = ran)
+      queriesRun = ran, conQueryWidths = conWidths.result(),
+      widthKeysAfter = Drain.widthKeys.map(k => k -> spark.conf.getOption(k)).toMap)
   }
 
   def main(args: Array[String]): Unit = {
@@ -137,7 +147,10 @@ object ConcurrentSoak {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val width = spark.sessionState.conf.numShufflePartitions
+    val keys = Drain.widthKeys.map(k => k -> spark.conf.getOption(k)).toMap
     val r = run(spark, sfDir, base, waves = 3, mix = defaultMix)
+    val widthKept = r.conQueryWidths.forall(_ == width) && r.widthKeysAfter == keys
     def m(xs: Map[String, Double]) = xs.toSeq.sortBy(_._1)
       .map { case (k, v) => s""""$k":${f"$v%.2f"}""" }.mkString("{", ",", "}")
     val row =
@@ -147,11 +160,16 @@ object ConcurrentSoak {
         s""""stream_concurrent_sec":${f"${r.conStreamSec}%.1f"},""" +
         s""""batch_queries_completed_during_stream":${r.queriesRun},""" +
         s""""query_solo_sec":${m(r.soloQuerySec)},""" +
-        s""""query_concurrent_min_sec":${m(r.conQuerySec)}}"""
+        s""""query_concurrent_min_sec":${m(r.conQuerySec)},""" +
+        s""""session_width":$width,""" +
+        s""""concurrent_query_widths":${r.conQueryWidths.mkString("[", ",", "]")},""" +
+        s""""width_keys_after":${r.widthKeysAfter.toSeq.sorted
+          .map { case (k, v) => s""""$k":${v.fold("null")(x => s""""$x"""")}""" }
+          .mkString("{", ",", "}")}}"""
     println(row)
     val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "CONCURRENT_SOAK.json")
     Files.writeString(Paths.get(out), row + "\n")
     spark.stop()
-    if (!(r.goldEqual && r.silverEqual && r.quarantineEqual)) sys.exit(1)
+    if (!(r.goldEqual && r.silverEqual && r.quarantineEqual && widthKept)) sys.exit(1)
   }
 }

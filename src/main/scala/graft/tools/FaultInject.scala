@@ -149,8 +149,8 @@ object FaultInject {
     twice("quota")({ (c, tag) =>
       val d = s"${c.dir}/$tag"
       inWaves(c.docs, "doc_id", Seq("doc_id", "text", "source"), 1, s"$d/landing")(c.underKill(
-        QuotaStream.start(c.spark, s"$d/landing", s"$d/state", s"$d/cp", QuotaCap,
-          maxFilesPerTrigger = 1).awaitTermination()))
+        QuotaStream.runAvailableNow(c.spark, s"$d/landing", s"$d/state", s"$d/cp", QuotaCap,
+          maxFilesPerTrigger = 1)))
       Map("admitted" -> digest(QuotaStream.admitted(c.spark, s"$d/state")))
     }, c => {
       val spent = QuotaStream.admitted(c.spark, s"${c.dir}/faulted/state")
@@ -340,7 +340,7 @@ object FaultInject {
     val (failures, removed) = k.seen(from, to)
     val hit = landed(fired > 0, failures, removed)
     val fields = ListMap[String, Any]("scenario" -> s.name) ++ (outcome.fold(e => {
-      spark.streams.active.foreach(q => Try(q.stop()))
+      Drain.active(spark).foreach(q => Try(q.stop()))
       ListMap("verdict" -> "ERROR", "match" -> false, "landed" -> hit, "error" -> e.toString)
     }, { case (reference, faulted, inv, refSec, faultSec) =>
       val matched = reference == faulted

@@ -106,9 +106,7 @@ object StreamThroughput {
     // replay drain is exactly the case that admits everything at once.
     val (goldBatches, goldSec) = timed(drain(
       Medallion.startGoldIncremental(spark, dirs, t, maxFilesPerTrigger = 1000000), "gold"))
-    if (spark.streams.active.isEmpty)
-      scala.util.Try(
-        org.apache.spark.sql.execution.streaming.state.StateStore.stop())
+    graft.streaming.Drain.release(spark)
 
     val bronzeRows = spark.read.parquet(dirs.bronze).count()
     val bronzeIds = spark.read.parquet(dirs.bronze).select("log_id").distinct().count()

@@ -79,4 +79,23 @@ class QueryRecordSpec extends SparkSpec with JobLog {
     assert(r("exec.jobs") == 0)
     assert(r.toJson.contains("\"error\":"))
   }
+
+  test("analysis_ms includes the analysis that runs while the frame is built") {
+    // The five perfbench rel-tpch queries: a DataFrame is analyzed eagerly
+    // as it is built, and the noop write re-analyzes nothing, so without
+    // the built frame's own phase this sum reads 0.
+    val names = Seq("rel_q1_pricing_summary", "rel_q3_shipping_priority",
+      "rel_q6_forecast_revenue", "rel_q14_promo_effect", "rel_q19_disjunctive")
+    val recs = names.map(Graft.record(spark, dir, _))
+    info(recs.map(r => s"${r.name}=${r("catalyst.analysis_ms")}").mkString(" "))
+    assert(recs.forall(_.error.isEmpty))
+    assert(recs.map(_("catalyst.analysis_ms")).sum > 0)
+  }
+
+  test("an action on the built frame itself counts its analysis once") {
+    val built = spark.range(0, 100).toDF("x").groupBy("x").count()
+    val r = QueryRecord.measure(spark, "collect")(built)(_.collect())._1
+    val own = built.queryExecution.tracker.phases("analysis")
+    assert(r("catalyst.analysis_ms") == (own.endTimeMs - own.startTimeMs).toDouble)
+  }
 }

@@ -28,13 +28,13 @@ class QuotaStreamSpec extends SparkSpec {
     val ckpt = tempDir("quota-ckpt")
 
     wave(landing, 12, 0)
-    QuotaStream.start(spark, landing, state, ckpt, cap).awaitTermination()
+    QuotaStream.runAvailableNow(spark, landing, state, ckpt, cap)
     val after1 = QuotaStream.admitted(spark, state)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(after1.nonEmpty, "first wave admitted nothing")
 
     wave(landing, 30, 100)
-    QuotaStream.start(spark, landing, state, ckpt, cap).awaitTermination()
+    QuotaStream.runAvailableNow(spark, landing, state, ckpt, cap)
     val admitted = QuotaStream.admitted(spark, state).cache()
 
     // 1. Quotas hold: no source exceeds its cap.

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * every declared name is unique across the whole tree, and that the
   * runtime registry carries exactly the declared set. The same source
   * scan guards the one-install rule, the action-free loop widths, the
-  * one fault harness and the one per-query record. */
+  * one fault harness, the one per-query record and the one stream drain. */
 class RegistryDupSpec extends AnyFunSuite {
 
   private def scalaSources(dir: java.io.File): Seq[java.io.File] =
@@ -89,5 +89,20 @@ class RegistryDupSpec extends AnyFunSuite {
       .filter(f => adds.findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined)
       .map(_.getPath.stripPrefix("src/main/scala/graft/")).sorted
     assert(owners === Seq("api/QueryRecord.scala", "tools/FaultInject.scala"))
+  }
+
+  test("streams are awaited and released only by Drain; shared conf is set in three files") {
+    def files(dir: String, needle: scala.util.matching.Regex): Seq[String] =
+      scalaSources(new java.io.File(dir))
+        .filter(f => needle.findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined)
+        .map(_.getPath.stripPrefix("src/main/scala/graft/")).sorted
+    assert(files("src/main/scala/graft/streaming", """awaitTermination\(|StateStore\.stop""".r) ===
+      Seq("streaming/Drain.scala"))
+    // StreamWidth (the batch loops) and SortedRunIndex stay open until the
+    // loops and the index compaction carry their width in the plan.
+    val setters = files("src/main/scala/graft", """conf\.(un)?set\(""".r)
+      .filterNot(p => p.startsWith("tools/") || p == "GraftSession.scala")
+    assert(setters === Seq("api/StreamWidth.scala", "sources/SortedRunIndex.scala",
+      "streaming/Drain.scala"))
   }
 }
