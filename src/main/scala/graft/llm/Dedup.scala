@@ -167,8 +167,12 @@ object Dedup extends QueryModule {
       .select("doc_a", "doc_b").distinct()
     // Exact verification on candidates only — the same join verifyPairs
     // runs for the LSH and incremental paths (one implementation for the
-    // semantics the oracle requires all three to agree on).
-    verifyPairs(cand, ordered.select(col("doc_id"), col("sorted_sh").as("sh"), col("n")), tau)
+    // semantics the oracle requires all three to agree on). MERGE: the
+    // estimate of `ordered` is the exploded `sh`'s, a corpus-scale side
+    // that must never broadcast (see verifyPairs). Pinned here, not on
+    // `ordered`, so the prefix self-join above keeps its own plan.
+    verifyPairs(cand,
+      ordered.select(col("doc_id"), col("sorted_sh").as("sh"), col("n")).hint("merge"), tau)
   }
 
   /** shingles → counts → intersections → Jaccard-≥0.8 pairs, over whatever
@@ -260,8 +264,9 @@ object Dedup extends QueryModule {
     *   - band identity (r=4 rows × b=32 bands) is `xxhash64` over each
     *     4-element slice of the signature array, exploded to one row per
     *     (doc, band).
-    * The only shuffles are the candidate join on (band, band-hash) and the
-    * verify joins on doc ids — never an all-pairs product. */
+    * The only shuffles are the candidate join on (band, band-hash) and,
+    * unless the set table broadcasts, the verify joins on doc ids — never
+    * an all-pairs product. */
   /** The persisted LSH BAND INDEX of a corpus: (doc_id, band, bh) — the
     * table an incremental pipeline appends to each day. Signatures are one
     * codegen'd pass per document (see MinHashSig) — no row expansion, no
@@ -294,7 +299,15 @@ object Dedup extends QueryModule {
     * verify join (1M docs × ~100 shingles at the sf10 scale point), and
     * intersection sizes — hence Jaccard values — are unchanged by a
     * collision-free-in-practice hash (the same argument as the md5_long
-    * keys in the exact path; the hash never reaches the output). */
+    * keys in the exact path; the hash never reaches the output).
+    *
+    * The frame carries NO join pin, but its size estimate is wrong: it is
+    * the text scan's, taken before `transform` fans each document out to
+    * ~100 keys, so the planner can (and at sf10 did) under-estimate it
+    * ~100× and broadcast ~1 GiB. Every caller that verifies against it at
+    * corpus scale pins it to sort-merge itself ([[lshJaccardPairs]],
+    * [[incrementPairs]]); `CurationOps.decontaminateFuzzy` picks its own
+    * strategies around it. */
   def setsOf(corpus: DataFrame): DataFrame =
     shingleArrays(corpus)
       .select(col("doc_id"), expr("transform(sh, x -> xxhash64(x))").as("sh"))
@@ -302,15 +315,20 @@ object Dedup extends QueryModule {
 
   /** Exact-Jaccard verification over candidate (doc_a, doc_b) pairs.
     *
-    * MERGE hints on both verify joins: the shingle-set table's Catalyst
-    * size estimate comes from the scan BEFORE the array transform fans it
-    * out, so the planner can (and at sf10 did) under-estimate it ~100× and
-    * broadcast ~1 GiB — a driver OOM locally and never viable at corpus
-    * scale. A shuffled-hash build of the pair list is faster when it fits,
-    * but the loose-threshold sweep's candidate volume outgrew a per-task
-    * hash build at sf30 (128 MB acquisition failure with every core
-    * running a task) — sort-merge spills instead of dying, at any τ and
-    * any scale. */
+    * No strategy pin here: both verify joins are sized from the `sets`
+    * estimate, so a pin goes on a `sets` frame whose estimate is wrong.
+    * Callers hand derived sets in with a MERGE hint (text-derived
+    * [[setsOf]]; the prefix path's `ordered`, behind an explode and an
+    * aggregate; the incremental union), which reaches both joins through
+    * the renaming projections. For them a broadcast would be ~1 GiB at
+    * sf10, and a shuffled-hash build of the pair list outgrew a task at
+    * sf30 on the loose-threshold sweep (128 MB acquisition failure);
+    * sort-merge spills instead. The STORED [[TextFeatures]] table comes in
+    * unpinned: its estimate is its parquet file size, which covers every
+    * stored column and so over-states the three read here (1.46 MB of
+    * files, 0.42 MB shuffled at sf0.01). It broadcasts while that estimate
+    * is under `spark.sql.autoBroadcastJoinThreshold`, sort-merges above
+    * it, and AQE may still switch on the measured sizes. */
   private def verifyPairs(cand: DataFrame, sets: DataFrame,
       tau: Double = 0.8): DataFrame = {
     // Native count-only intersection (guide §4): `size(array_intersect)`
@@ -318,9 +336,7 @@ object Dedup extends QueryModule {
     // pair — 24.9 s task time + 2.0 s GC on eval_lsh's verify stage at
     // sf0.1. intersect_count ≡ it bit-for-bit (IntersectCountSpec).
     cand
-      .hint("merge")
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sa"), col("n").as("na")), "doc_a")
-      .hint("merge")
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sb"), col("n").as("nb")), "doc_b")
       .withColumn("i", expr("intersect_count(sa, sb)"))
       .withColumn("jaccard", col("i").cast("double") / (col("na") + col("nb") - col("i")))
@@ -486,7 +502,8 @@ object Dedup extends QueryModule {
         Seq("band", "bh"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    verifyPairs(cand, setsOf(corpus), tau)
+    // MERGE: the derived sets' estimate is the pre-transform scan's.
+    verifyPairs(cand, setsOf(corpus).hint("merge"), tau)
   }
 
   def minhashPairs(corpus: DataFrame): DataFrame = lshJaccardPairs(corpus)
@@ -508,8 +525,9 @@ object Dedup extends QueryModule {
 
   /** [[lshJaccardPairs]] over a [[TextFeatures]] table: candidates from
     * stored-signature bands, verification against stored shingle keys.
-    * Same MERGE discipline — the band table still sits behind a
-    * posexplode, and the set side is corpus-scale. */
+    * The band self-join keeps its MERGE pin (the band table still sits
+    * behind a posexplode); the stored set side goes to [[verifyPairs]]
+    * unpinned, so its file-size estimate picks the verify strategy. */
   def lshJaccardPairsFeat(feat: DataFrame, tau: Double = 0.8, r: Int = 4,
       b: Int = 32): DataFrame = {
     val bands = TextFeatures.bands(feat, r, b)
@@ -571,7 +589,9 @@ object Dedup extends QueryModule {
     // emits) once per copy.
     val sets = idxSets.unionAll(setsOf(newDocs)).dropDuplicates("doc_id")
     if (broadcastIncrement) verifyPairsBroadcast(cand, sets)
-    else verifyPairs(cand, sets)
+    // MERGE on the whole union: a hint below a union never reaches the
+    // join above it, and the union's estimate inherits setsOf's.
+    else verifyPairs(cand, sets.hint("merge"))
   }
 
   /** As [[incrementPairs]] (broadcast mode), but against a

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.sources.Parquet
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -100,8 +101,8 @@ object VectorIndex {
     * per batchId: a replay overwrites its own `batch=` dir only. */
   def append(spark: SparkSession, vecs: DataFrame, indexDir: String, batchId: Long,
       storeVectors: Boolean = false): Unit = {
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val cb = spark.read.parquet(s"$indexDir/codebook")
+    val cents = Parquet.open(spark, s"$indexDir/centroids")
+    val cb = Parquet.open(spark, s"$indexDir/codebook")
     if (!storeVectors) {
       assignCodes(vecs, cents, cb)
         .write.mode("overwrite").parquet(s"$indexDir/codes/batch=$batchId")
@@ -127,14 +128,14 @@ object VectorIndex {
 
   /** The persisted (vec_id, cell, code) table across all appended batches. */
   def codes(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/codes").drop("batch")
+    Parquet.open(spark, s"$indexDir/codes").drop("batch")
 
   /** The persisted IVF-flat (vec_id, cell, ve) table (storeVectors mode).
     * `belowBatch` restricts to batches strictly before an id — the replay-
     * stable "prior state" view an incremental batch joins against. */
   def lists(spark: SparkSession, indexDir: String,
       belowBatch: Option[Long] = None): DataFrame = {
-    val raw = spark.read.parquet(s"$indexDir/lists")
+    val raw = Parquet.open(spark, s"$indexDir/lists")
     belowBatch.fold(raw)(b => raw.filter(col("batch") < b)).drop("batch")
   }
 
@@ -203,8 +204,8 @@ object VectorIndex {
       queries: DataFrame,
       k: Int,
       nprobe: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    val cb = spark.read.parquet(s"$indexDir/codebook")
+    val cents = Parquet.open(spark, s"$indexDir/centroids")
+    val cb = Parquet.open(spark, s"$indexDir/codebook")
     val cbArr = cb.agg(sort_array(collect_list(struct(col("c"), col("vc")))).as("cb"))
     val q = queries.select(col("vec_id").as("query_id"), col("ve").as("vq"))
     // Probe: queries are small by contract → walk the same two-level

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.util.Try
 
 import graft.api.StreamWidth
@@ -31,7 +32,11 @@ import org.apache.spark.sql.types.StructType
   *   - Release. Afterwards the cached RocksDB state-store providers and
   *     their maintenance pool are unloaded ([[release]]): they otherwise
   *     tax later batch work in the same JVM (measured 20–35%), and the next
-  *     drain reloads from its checkpoint.
+  *     drain reloads from its checkpoint. The streaming-event buses that
+  *     the fork and each query's cloned session subscribed to the
+  *     application's listener bus are removed too, exactly those and no
+  *     other drain's: each would otherwise receive every later Spark event
+  *     for the life of the application (two per drain).
   */
 object Drain {
 
@@ -52,20 +57,28 @@ object Drain {
     val own = fork.streams.listListeners().map(_.getClass).toSet
     val borrowed = spark.streams.listListeners().filterNot(l => own(l.getClass))
     borrowed.foreach(fork.streams.addListener)
+    val started = mutable.LinkedHashSet.empty[StreamingQuery]
     try stages.zipWithIndex.foreach { case (stage, i) =>
-      stage(fork).foreach(q => require(q.awaitTermination(timeoutMs),
+      val qs = stage(fork)
+      started ++= qs
+      qs.foreach(q => require(q.awaitTermination(timeoutMs),
         s"stage ${i + 1} of ${stages.size} draining ${paths.mkString(", ")} " +
           s"did not finish within $timeoutMs ms; later stages not started"))
     } catch { case e: Throwable =>
-      fork.streams.active.foreach(q => Try(q.stop()))
+      val running = fork.streams.active
+      started ++= running
+      running.foreach(q => Try(q.stop()))
       throw e
     } finally {
-      if (borrowed.nonEmpty) {
+      if (fork.streams.listListeners().nonEmpty) {
         // The last progress events are still on the bus when the queries
-        // terminate.
+        // terminate; the fork's listeners get them before its bus closes.
         Try(GraftSqlBridge.waitForListeners(spark.sparkContext))
         borrowed.foreach(fork.streams.removeListener)
       }
+      Try(GraftSqlBridge.closeStreamsBus(fork))
+      started.foreach(q =>
+        Try(GraftSqlBridge.closeStreamsBus(GraftSqlBridge.streamSession(q))))
       release(spark)
     }
   }

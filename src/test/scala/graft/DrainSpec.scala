@@ -88,6 +88,18 @@ class DrainSpec extends SparkSpec {
     assert(seen.map(_.inputRows).sum == rows)
   }
 
+  test("drains leave no streaming-event bus subscribed to the listener bus") {
+    val (landing, _) = eventFeed()
+    spark.streams // the caller's own bus, which lives as long as the caller
+    val sc = spark.sparkContext
+    val before = GraftSqlBridge.streamsBuses(sc)
+    (1 to 5).foreach { i =>
+      DistinctStream.runAvailableNow(spark, landing, tempDir(s"drain-bus-out$i"),
+        tempDir(s"drain-bus-cp$i"), maxFilesPerTrigger = 2)
+    }
+    assert(GraftSqlBridge.streamsBuses(sc) == before)
+  }
+
   test("a failing stage stops the queries the drain started") {
     val (landing, _) = eventFeed()
     val schema = spark.read.parquet(landing).schema

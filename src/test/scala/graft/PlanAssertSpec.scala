@@ -385,19 +385,70 @@ class PlanAssertSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  /** Each join node of a formatted plan: (operator, its `Left keys` line). */
+  private def joins(p: String): Seq[(String, String)] =
+    p.split("\n(?=\\(\\d+\\) )").toSeq.flatMap { block =>
+      val lines = block.linesIterator.toSeq
+      val op = lines.head.split(" ").lift(1).getOrElse("")
+      if (!op.endsWith("Join")) None
+      else lines.find(_.startsWith("Left keys")).map(op -> _)
+    }
+
+  /** The operators of the joins keyed on `key` (first left key). */
+  private def joinsOn(p: String, key: String): Seq[String] =
+    joins(p).collect { case (op, keys) if keys.contains(s"[$key#") => op }
+
   test("LSH dedup: corpus-sized band/set tables never broadcast") {
-    // The band and shingle-set tables sit behind posexplode/transform, so
-    // Catalyst's size estimates are the pre-fanout child's — without the
-    // strategy hints the planner picks a "broadcastable" side that
-    // materializes ~1 GiB at sf10 (measured: driver abort + executor OOM).
-    // Candidate self-join AND verify joins = sort-merge (spills, never a
-    // per-task hash build — the sweep's candidate volume outgrew a
+    // The band tables sit behind posexplode, and sets derived from text
+    // behind `transform`, so Catalyst's estimates are the pre-fanout
+    // child's: "broadcastable" on paper, ~1 GiB at sf10 (measured: driver
+    // abort + executor OOM). Those joins are pinned to sort-merge (spills,
+    // never a per-task hash build — the sweep's candidate volume outgrew a
     // shuffled-hash build at sf30).
     for (n <- Seq("llm_dedup_jaccard", "llm_dedup_minhash")) {
-      val p = plan(n)
-      assert(p.contains("SortMergeJoin"), s"$n candidate join lost sort-merge")
-      assert(!p.contains("BroadcastHashJoin"),
-        s"$n broadcasts a corpus-sized side:\n$p")
+      val bandJoins = joinsOn(plan(n), "band")
+      assert(bandJoins.nonEmpty && bandJoins.forall(_ == "SortMergeJoin"),
+        s"$n band self-join: $bandJoins")
+    }
+    val fromText = graft.llm.Dedup.lshJaccardPairs(graft.llm.Dedup.nearCorpus(spark, sfDir))
+      .queryExecution.explainString(FormattedMode)
+    assert(!fromText.contains("BroadcastHashJoin"),
+      s"the from-text path broadcasts a derived side:\n$fromText")
+    assert(Seq("doc_a", "doc_b").forall(k => joinsOn(fromText, k) == Seq("SortMergeJoin")),
+      s"from-text verify joins: ${joins(fromText)}")
+    // The stored TextFeatures set table is unpinned: it is estimated from
+    // its parquet files, which hold every stored column, so the estimate
+    // over-states the three columns verification reads, and a broadcast
+    // chosen on it is safe.
+    val sets = graft.llm.TextFeatures.features(spark, sfDir, "near")
+      .select("doc_id", "sh", "n")
+    val fileBytes = sets.inputFiles.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).getLen
+    }.sum
+    val estimate = sets.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(estimate > 0 && estimate <= fileBytes, s"estimate $estimate, files $fileBytes")
+    // Fixture scale: under the threshold, both verify joins broadcast the
+    // set table, so the candidates are never shuffled by doc id.
+    val small = plan("llm_dedup_minhash")
+    assert(Seq("doc_a", "doc_b").forall(k => joinsOn(small, k) == Seq("BroadcastHashJoin")),
+      s"verify joins at fixture scale: ${joins(small)}")
+    val verifyExchange = """hashpartitioning\((doc_a|doc_b)#\d+L?, \d+\)""".r
+    assert(verifyExchange.findFirstIn(small).isEmpty,
+      s"verify exchanges at fixture scale:\n$small")
+    // Corpus scale: the threshold below the table (its files, and the
+    // estimate taken from them) — both verify joins sort-merge.
+    val conf = spark.conf
+    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      conf.set("spark.sql.autoBroadcastJoinThreshold", (estimate - 1).toString)
+      val large = plan("llm_dedup_minhash")
+      assert(!large.contains("BroadcastHashJoin"), s"corpus-scale plan broadcasts:\n$large")
+      assert(Seq("doc_a", "doc_b").forall(k => joinsOn(large, k) == Seq("SortMergeJoin")),
+        s"verify joins at corpus scale: ${joins(large)}")
+    } finally saved match {
+      case Some(v) => conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+      case None => conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
